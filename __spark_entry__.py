@@ -4,10 +4,10 @@
 slow-query panel, `/root/reference/myapp/views.py:396-407`) on sf0.001.
 `queries()` exposes every implemented operator from SURVEY.md §2 plus
 the training-data-pipeline layer (see COVERAGE.md for the full map);
-`oracle_sql()` gives the DuckDB twin for each, omitted only where the
-result is xxhash64-dependent or sketch-saturated
-(MinHash/SimHash/HLL/KLL/keepers/approx-percentile) — those are
-verified against exact algorithms in tests/ instead. (K-means, IVF-ANN
+`oracle_sql()` gives the DuckDB twin for each: MinHash/SimHash run
+md5-derived portable hash families and the HLL/KLL/approx-percentile
+entries emit exact statistics plus error-bound verdict columns, so
+they are oracle-backed too. (K-means, IVF-ANN
 and LSH-ANN ARE oracle-backed: integer-quantized arithmetic, decimal
 centroids and literal-embedded planes make them exactly reproducible,
 iteration and approximation notwithstanding.)
@@ -493,23 +493,19 @@ def _q_ngram_jaccard(spark, sf):
 
 
 def _q_minhash_lsh(spark, sf):
-    # registry entry runs the PORTABLE hash family (md5-derived affine
-    # permutations) at a distinct operating point from
+    # the md5-affine MinHash family at a distinct operating point from
     # minhash_portable_pairs (4-gram shingles, 0.5 threshold vs the
-    # twin's 3-gram/0.3), so the pipeline is end-to-end oracle-checkable
-    # at two configurations; the xxhash64 fast path
-    # (dedup.minhash_lsh_pairs) stays as library surface, pinned by
-    # pytest equivalence on the same fixtures
+    # twin's 3-gram/0.3), so the pipeline is end-to-end oracle-checked
+    # at two configurations
     return dedup.minhash_lsh_pairs_portable(
         load_table(spark, sf, "documents"), threshold=0.5, shingle_k=4
     )
 
 
 def _q_simhash_pairs(spark, sf):
-    # PORTABLE 60-bit md5 simhash at a distinct operating point from
+    # the 60-bit md5 SimHash at a distinct operating point from
     # simhash_portable_pairs (hamming ≤ 2 / 3 pigeonhole bands vs the
-    # twin's ≤ 3 / 4 bands); the xxhash64 fast path
-    # (dedup.simhash_pairs) stays as library surface, pytest-pinned
+    # twin's ≤ 3 / 4 bands)
     return dedup.simhash_pairs_portable(load_table(spark, sf, "documents"), max_hamming=2)
 
 
@@ -4004,9 +4000,7 @@ def oracle_sql() -> dict[str, str]:
     # dedup.portable_perm_params), so signatures, band keys, candidate
     # set and exact verification are bit-identical across engines.
     # Two operating points: the `_portable_pairs` twin at the library
-    # defaults, and `minhash_lsh_pairs` at 4-gram/0.5 (registry entry
-    # re-pointed to the portable family in round 4 so every registry
-    # entry is oracle-backed; the xxhash64 form stays library+pytest).
+    # defaults, and `minhash_lsh_pairs` at 4-gram/0.5.
     sql["minhash_portable_pairs"] = _minhash_portable_oracle(threshold=0.30, shingle_k=3)
     sql["minhash_lsh_pairs"] = _minhash_portable_oracle(threshold=0.5, shingle_k=4)
 
@@ -4014,7 +4008,7 @@ def oracle_sql() -> dict[str, str]:
     # ±1 bit sums / sign assembly / pigeonhole bands / bit_count(xor)
     # verify as dedup.simhash_pairs_portable — at hamming ≤ 3 (4 bands)
     # for the `_portable_pairs` twin and ≤ 2 (3 bands) for the
-    # round-4-re-pointed `simhash_pairs` registry entry.
+    # `simhash_pairs` registry entry.
     sql["simhash_portable_pairs"] = _simhash_portable_oracle(max_hamming=3)
     sql["simhash_pairs"] = _simhash_portable_oracle(max_hamming=2)
 

@@ -119,11 +119,10 @@ HEADLINE = [
     "class_balance",
     # round-3 continuation: lexical retrieval, tokenizer application,
     # attribution, compressed-first ANN. NOTE (round 4): the
-    # minhash_lsh_pairs / simhash_pairs entries above now resolve to
-    # the PORTABLE md5 family (registry re-point for full oracle
-    # coverage), so the headline includes the portability price
-    # (~+1 s at sf0.1 for minhash vs the xxhash64 library fast path) —
-    # account for that when comparing totals against r01–r03
+    # minhash_lsh_pairs / simhash_pairs entries above resolve to the
+    # md5 hash family since then (~+1 s at sf0.1 for minhash vs the
+    # xxhash64 form r01–r03 timed) — account for that when comparing
+    # totals against r01–r03
     "bm25_search",
     "tokenize_to_ids",
     "touch_attribution",

@@ -31,13 +31,5 @@ def normalize_embedding(vecs: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@pandas_udf(T.DoubleType())
-def gaussian_weight(values: pd.Series) -> pd.Series:
-    """exp(-(x-50)^2 / (2*15^2)) — a vectorized scalar transform (the
-    threshold-flag shape F13 as a smooth score)."""
-    a = values.to_numpy(dtype=np.float64)
-    return pd.Series(np.exp(-((a - 50.0) ** 2) / (2.0 * 15.0**2)))
-
-
 def normalized(col: Column | str) -> Column:
     return normalize_embedding(F.col(col) if isinstance(col, str) else col)

@@ -3553,9 +3553,12 @@ def _jt_grid_group(pdf):
     cents = np.sort(np.unique(cents_np))
     vi = np.searchsorted(cents, cents_np)
     m = np.zeros((24, len(cents)), dtype=np.int64)
-    # NULL c cells counted as 0, the former grid's coalesce(c, 0)
-    m[sub["h"].to_numpy(dtype=np.int64), vi] = (
-        sub["c"].fillna(0).to_numpy(dtype=np.int64)
+    # NULL c cells counted as 0, the former grid's coalesce(c, 0);
+    # add.at, not assignment: a cell split over several rows sums
+    np.add.at(
+        m,
+        (sub["h"].to_numpy(dtype=np.int64), vi),
+        sub["c"].fillna(0).to_numpy(dtype=np.int64),
     )
     n = int(m.sum())
     if n > 3_000_000_000:
@@ -3595,8 +3598,14 @@ def jt_from_cell_counts(per_cell: DataFrame) -> DataFrame:
     sf0.001/0.01/0.1."""
     per_cell = _materialize(per_cell)
     et_type = per_cell.schema["event_type"].dataType.simpleString()
-    jt = per_cell.groupBy("event_type").applyInPandas(
-        _jt_grid_group, schema=f"event_type {et_type}, jt2d bigint"
+    # NULL cents never enter jt2 and must not cross the Arrow boundary:
+    # a NULL in the group would hand `cents` to pandas as float64,
+    # collapsing bigint cents above 2^53 into ties (a type left with
+    # no rows gets jt2 = 0 from the coalesce below)
+    jt = (
+        per_cell.filter(F.col("cents").isNotNull())
+        .groupBy("event_type")
+        .applyInPandas(_jt_grid_group, schema=f"event_type {et_type}, jt2d bigint")
     )
     grp = (
         per_cell.groupBy("event_type", "h")

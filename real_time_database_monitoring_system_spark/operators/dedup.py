@@ -10,10 +10,12 @@ Scale design (the point of these operators is 100 TB corpora):
   quadratic step runs only within small buckets.
 - MinHash signatures are computed by explode→min-aggregate: the explode
   is map-side, the 32 min() partial-aggregate combine before the single
-  shuffle on doc_id. Band hashes then bucket-join docs; candidate pairs
+  shuffle on doc_id. Band keys then bucket-join docs; candidate pairs
   are verified with exact Jaccard on the (tiny) candidate set only.
-- SimHash reduces each doc to one 64-bit int; near-dup pairs =
+- SimHash reduces each doc to one 60-bit int; near-dup pairs =
   bit_count(xor) ≤ r within blocks. All bit math is JVM-side.
+- Both sketches hash with md5 prefixes, so every signature is
+  bit-reproducible in any SQL engine (the DuckDB oracles do).
 """
 
 from __future__ import annotations
@@ -211,100 +213,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(documents: DataFrame, n_hashes: int = N_HASHES, shingle_k: int = 3) -> DataFrame:
-    """MinHash signatures: explode shingles, hash each shingle string
-    ONCE to a 64-bit key, derive the n permutation hashes from that
-    long (cheap long→long hashing instead of n string hashes), then
-    min-aggregate per doc. The n min() aggregates combine map-side;
-    one shuffle on doc_id. (A one-permutation-hashing variant with
-    bucketed mins + densification was benchmarked and lost to this
-    form in Spark's hash-aggregate path — conditional aggregates cost
-    more than the saved long-hashes.)"""
-    exploded = (
-        _shingled(documents, shingle_k)
-        .select("doc_id", F.explode("shingles").alias("sh"))
-        .select("doc_id", F.xxhash64("sh").alias("h"))
-    )
-    # one parsed expression per aggregate (the portable_bands py4j
-    # rule); int literal types match the F.lit form, so the xxhash64
-    # values are identical
-    mins = [F.expr(f"min(xxhash64({i}, h)) AS mh_{i}") for i in range(n_hashes)]
-    return exploded.groupBy("doc_id").agg(*mins)
-
-
-def minhash_lsh_pairs(
-    documents: DataFrame,
-    threshold: float = 0.30,
-    n_hashes: int = N_HASHES,
-    bands: int = BANDS,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """MinHash + LSH near-dup pairs, verified with exact Jaccard.
-
-    Pipeline: signature → band hashes (rows-per-band = n/bands) →
-    explode bands → self-join on (band_id, band_hash) → distinct
-    candidate pairs → exact-Jaccard verification on candidates only.
-    At scale the band join is the only shuffle that matters and each
-    bucket is small; no global quadratic step exists.
-    """
-    # ONE shingling pass shared by both consumers: signatures (explode →
-    # min-agg) and exact-Jaccard verification arrays both derive from
-    # the same materialized hashed-shingle table, so the corpus is
-    # scanned and shingled once, not twice.
-    if n_hashes % bands != 0:
-        # same contract as the portable twin: a silent floor-division
-        # would drop trailing signature rows (n_hashes=32, bands=5
-        # uses only 30) or build an empty band hash (bands > n_hashes)
-        raise ValueError("minhash_lsh_pairs: bands must divide n_hashes")
-    hs_base = _materialize(
-        _shingled(documents, shingle_k).select(
-            "doc_id",
-            F.transform("shingles", lambda s: F.xxhash64(s)).alias("hs"),
-        )
-    )
-    exploded = hs_base.select("doc_id", F.explode("hs").alias("h"))
-    # one parsed expression per aggregate / band struct (the
-    # portable_bands py4j rule); literal types match the F.lit form,
-    # so the xxhash64 values are identical
-    mins = [F.expr(f"min(xxhash64({i}, h)) AS mh_{i}") for i in range(n_hashes)]
-    sig = exploded.groupBy("doc_id").agg(*mins)
-    rows_per_band = n_hashes // bands
-    band_structs = ", ".join(
-        "struct({b} AS band_id, xxhash64({cols}) AS band_hash)".format(
-            b=b,
-            cols=", ".join(
-                f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    banded = sig.selectExpr(
-        "doc_id", f"explode(array({band_structs})) AS band"
-    ).selectExpr("doc_id", "band.band_id AS band_id", "band.band_hash AS band_hash")
-    left = banded.select("band_id", "band_hash", F.col("doc_id").alias("doc_a"))
-    right = banded.select("band_id", "band_hash", F.col("doc_id").alias("doc_b"))
-    cand = (
-        left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    # exact-Jaccard verification on candidates only, over sorted
-    # hashed-shingle arrays (long comparisons, not string compares) —
-    # derived from the same materialized base as the signatures
-    shing = hs_base.select("doc_id", F.array_sort("hs").alias("hs"))
-    verified = cand.join(
-        shing.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a")), "doc_a"
-    ).join(shing.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b")), "doc_b")
-    inter = F.size(F.array_intersect("hs_a", "hs_b"))
-    union = F.size("hs_a") + F.size("hs_b") - inter
-    return (
-        verified.select("doc_a", "doc_b", (inter.cast("double") / union.cast("double")).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-        .orderBy("doc_a", "doc_b")
-    )
-
-
 MINHASH_P = (1 << 61) - 1  # Mersenne prime modulus for the affine family
 
 
@@ -362,7 +270,7 @@ def portable_bands(
     # one parsed expression per aggregate / per band struct — the
     # Column-by-Column form costs ~8 py4j round-trips per hash of
     # driver time on EVERY construction (measured ~12× slower at
-    # n=128; see simhash_64 / similarity._plane_dot_sql for the same
+    # n=128; see portable_simhash / similarity._plane_dot_sql for the same
     # rule). Literal types match the DSL form (int < 2^31 → INT,
     # 2^61−1 → BIGINT), so the arithmetic and results are identical.
     mins = [
@@ -399,10 +307,8 @@ def minhash_lsh_pairs_portable(
     """MinHash + LSH near-dup pairs with an ENGINE-PORTABLE hash family,
     so the full pipeline — signatures, banding, candidates, exact
     verification — is bit-reproducible outside Spark and can be
-    oracle-checked end to end (the xxhash64 form in
-    `minhash_lsh_pairs` is the fast default; this variant is the
-    cross-system-reproducibility contract, e.g. auditing one cluster's
-    dedup decisions from another engine).
+    oracle-checked end to end (e.g. auditing one cluster's dedup
+    decisions from another engine).
 
     Hash family: shingle → 60-bit key from the md5 hex prefix (both
     engines produce identical md5), split into 30-bit halves, then
@@ -412,15 +318,12 @@ def minhash_lsh_pairs_portable(
     rendered signature slices joined with '|' (no engine-specific
     band hash).
 
-    Same scale shape as `minhash_lsh_pairs`: one materialized
-    shingle-hash pass feeds signatures AND verification; band
-    equi-join produces candidates; exact Jaccard runs on candidates
-    only. Cost vs the xxhash64 form is one md5 per shingle occurrence
-    (~2× the hashing work) — the price of portability. Since round 4
-    the registry's `minhash_lsh_pairs` entry also runs this family (at
-    a distinct 4-gram/0.5 operating point) so every registry entry is
-    oracle-backed; the bench headline therefore includes the md5 cost,
-    and the xxhash64 form above remains the library fast path."""
+    Scale shape: one materialized shingle-hash pass feeds signatures
+    AND verification; the band equi-join produces candidates (each
+    bucket is small, no global quadratic step); exact Jaccard runs on
+    candidates only. The registry serves this family at two operating
+    points (`minhash_portable_pairs` at 3-gram/0.3,
+    `minhash_lsh_pairs` at 4-gram/0.5)."""
     if n_hashes % bands != 0:
         raise ValueError("minhash_lsh_pairs_portable: bands must divide n_hashes")
     hs_base = portable_shingle_hashes(documents, shingle_k)
@@ -484,7 +387,7 @@ def winnow_overlap_pairs(
     least one shared fingerprint, at ~2/(w+1) the density of full
     shingling. That makes this the partial-overlap detector (copied
     passages, boilerplate blocks) complementing whole-set Jaccard
-    (`minhash_lsh_pairs`) and positional spans (`substring_dup_spans`).
+    (`minhash_lsh_pairs_portable`) and positional spans (`substring_dup_spans`).
 
     Portability: hashes are the 60-bit md5 keys shared with the
     portable MinHash family; window minima are value-minima (ties
@@ -731,118 +634,13 @@ def keeper_list_best(
     )
 
 
-def simhash_64(documents: DataFrame) -> DataFrame:
-    """64-bit SimHash per document: per-token xxhash64, sum ±1 per bit
-    over tokens, sign → bit. Explode + 64 conditional-sum aggregates
-    (map-side combine), then bit-OR assembly — entirely JVM bit math."""
-    toks = F.filter(F.split("text", r"\s+"), lambda x: x != "")
-    exploded = (
-        _spread(documents, "doc_id", cap=4 * documents.rdd.getNumPartitions())
-        .select("doc_id", F.explode(F.array_distinct(toks)).alias("tok"))
-        .select("doc_id", F.xxhash64("tok").alias("h"))
-    )
-    # one parsed expression per aggregate / per assembly term — the
-    # Column-by-Column form costs ~1k py4j round-trips of driver time
-    # (see similarity._plane_dot_sql for the measurement)
-    sums = [
-        F.expr(f"sum(CASE WHEN (shiftright(h, {b}) & 1) = 1 THEN 1 ELSE -1 END)").alias(f"s_{b}")
-        for b in range(64)
-    ]
-    agg = exploded.groupBy("doc_id").agg(*sums)
-    assemble = " | ".join(
-        f"(CASE WHEN s_{b} > 0 THEN shiftleft(CAST(1 AS BIGINT), {b}) ELSE CAST(0 AS BIGINT) END)"
-        for b in range(64)
-    )
-    return agg.select("doc_id", F.expr(assemble).alias("simhash"))
-
-
-def simhash_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """SimHash near-dup pairs via pigeonhole banding — recall-complete
-    and never all-pairs.
-
-    The 64-bit simhash is split into ``max_hamming + 1`` contiguous bit
-    bands; two hashes within hamming distance r differ in at most r
-    bands, so they agree EXACTLY on at least one band (pigeonhole).
-    Candidates are therefore the band-equality buckets — a plain
-    equi-join on (source, band_id, band_value) — and verification is
-    the exact ``bit_count(xor) ≤ r`` on candidates only. Identical
-    output to the quadratic all-pairs formulation (asserted in
-    tests/test_dedup_similarity.py), with bucket sizes ~n/2^16 per
-    source at the default r=3 (4 bands × 16 bits — the standard web
-    dedup setting; banding is only selective for small r, which is
-    also the regime where simhash distance is meaningful).
-    """
-    bands = max_hamming + 1
-    base, rem = divmod(64, bands)
-    widths = [base + 1 if i < rem else base for i in range(bands)]
-    offsets = [sum(widths[:i]) for i in range(bands)]
-    # materialized: the banded index feeds both sides of the pair join
-    sh = _materialize(
-        simhash_64(documents).join(documents.select("doc_id", "source"), "doc_id")
-    )
-    def _mask(w: int) -> int:  # signed-64 wrap (w=64 → -1 = all bits)
-        m = (1 << w) - 1
-        return m - (1 << 64) if m >= 1 << 63 else m
-
-    band_structs = [
-        F.struct(
-            F.lit(i).alias("band_id"),
-            F.shiftright(F.col("simhash"), offsets[i])
-            .bitwiseAND(F.lit(_mask(widths[i])))
-            .alias("band_val"),
-        )
-        for i in range(bands)
-    ]
-    banded = sh.select(
-        "source", "doc_id", "simhash", F.explode(F.array(*band_structs)).alias("b")
-    ).select(
-        "source",
-        "doc_id",
-        "simhash",
-        F.col("b.band_id").alias("band_id"),
-        F.col("b.band_val").alias("band_val"),
-    )
-    a = banded.select(
-        "source", "band_id", "band_val",
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"),
-    )
-    b = banded.select(
-        "source", "band_id", "band_val",
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"),
-    )
-    return (
-        a.join(b, ["source", "band_id", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "source",
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-def simhash_pairs_portable(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """SimHash near-dup pairs with an ENGINE-PORTABLE 60-bit hash —
-    the `minhash_lsh_pairs_portable` contract applied to SimHash: the
-    per-token hash is the md5 hex prefix (identical in any engine), so
-    signatures, pigeonhole bands, candidates and the bit_count(xor)
-    verification are bit-reproducible outside Spark and oracle-checked
-    end to end. The xxhash64 `simhash_pairs` stays the fast default.
-
-    60 bits (15 hex chars — the widest md5 prefix that fits signed-64
-    without sign games) split into ``max_hamming + 1`` bands; the
-    pigeonhole recall argument is width-independent. Same scale shape
-    as `simhash_pairs`: one materialized signature pass feeds both
-    sides of the band equi-join; verification touches candidates only.
-    """
-    bands = max_hamming + 1
-    base, rem = divmod(60, bands)
-    widths = [base + (1 if i < rem else 0) for i in range(bands)]
-    offsets = [sum(widths[:i]) for i in range(bands)]
+def portable_simhash(documents: DataFrame) -> DataFrame:
+    """(doc_id, simhash): the 60-bit SimHash signature per document.
+    Per distinct token the hash is the md5 hex prefix (15 hex chars —
+    the widest md5 prefix that fits signed-64 without sign games), so
+    any engine with md5 computes identical signatures. Explode + 60
+    conditional ±1 sums (map-side combine), then sign → bit assembly —
+    entirely JVM bit math."""
     toks = F.filter(F.split("text", r"\s+"), lambda x: x != "")
     exploded = (
         _spread(documents, "doc_id", cap=4 * documents.rdd.getNumPartitions())
@@ -854,6 +652,9 @@ def simhash_pairs_portable(documents: DataFrame, max_hamming: int = 3) -> DataFr
             .alias("h"),
         )
     )
+    # one parsed expression per aggregate / per assembly term — the
+    # Column-by-Column form costs ~1k py4j round-trips of driver time
+    # (see similarity._plane_dot_sql for the measurement)
     sums = [
         F.expr(f"sum(CASE WHEN (shiftright(h, {b}) & 1) = 1 THEN 1 ELSE -1 END)").alias(f"s_{b}")
         for b in range(60)
@@ -863,8 +664,36 @@ def simhash_pairs_portable(documents: DataFrame, max_hamming: int = 3) -> DataFr
         f"(CASE WHEN s_{b} > 0 THEN shiftleft(CAST(1 AS BIGINT), {b}) ELSE CAST(0 AS BIGINT) END)"
         for b in range(60)
     )
-    sig = agg.select("doc_id", F.expr(assemble).alias("simhash"))
-    sh = _materialize(sig.join(documents.select("doc_id", "source"), "doc_id"))
+    return agg.select("doc_id", F.expr(assemble).alias("simhash"))
+
+
+def simhash_pairs_portable(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """SimHash near-dup pairs via pigeonhole banding over the
+    `portable_simhash` signatures — recall-complete and never
+    all-pairs. The `minhash_lsh_pairs_portable` contract applied to
+    SimHash: signatures, bands, candidates and the bit_count(xor)
+    verification are bit-reproducible outside Spark and oracle-checked
+    end to end.
+
+    The 60-bit signature is split into ``max_hamming + 1`` contiguous
+    bit bands; two signatures within hamming distance r differ in at
+    most r bands, so they agree EXACTLY on at least one band
+    (pigeonhole). Candidates are therefore the band-equality buckets —
+    a plain equi-join on (source, band_id, band_val) — and
+    verification is the exact ``bit_count(xor) ≤ r`` on candidates
+    only. Identical output to the quadratic all-pairs formulation
+    (asserted in tests/test_dedup_similarity.py); banding is only
+    selective for small r, which is also the regime where SimHash
+    distance is meaningful. One materialized signature pass feeds both
+    sides of the band equi-join.
+    """
+    bands = max_hamming + 1
+    base, rem = divmod(60, bands)
+    widths = [base + (1 if i < rem else 0) for i in range(bands)]
+    offsets = [sum(widths[:i]) for i in range(bands)]
+    sh = _materialize(
+        portable_simhash(documents).join(documents.select("doc_id", "source"), "doc_id")
+    )
     band_structs = [
         F.struct(
             F.lit(i).alias("band_id"),
@@ -1509,7 +1338,7 @@ def simhash_distance_hist(documents: DataFrame, max_hamming: int = 8) -> DataFra
     """SimHash threshold-tuning panel: the Hamming-distance histogram
     over banded candidate pairs, with the cumulative pair count per
     radius — the table an operator reads to pick `max_hamming` for
-    `simhash_pairs` (each row answers "if I dedup at radius h, how
+    `simhash_pairs_portable` (each row answers "if I dedup at radius h, how
     many pairs fire?"), the SimHash twin of `jaccard_threshold_curve`.
 
     Pure composition over `simhash_pairs_portable` at a WIDER radius

@@ -154,7 +154,7 @@ def banded_signatures_arrow(
     row-wise; at 8×16 bits the chain cost ~0.7 s of analysis + ~0.4 s
     of optimization + ~2.2 s of split-method evaluation PER CALL on a
     2 000-row table, and janino's 64 KB method limit forced the
-    codegen-off `materialize_wide` detour — all three disappear).
+    codegen-off materialize detour — all three disappear).
 
     BIT-IDENTICAL to the expression chains, by construction: the dot
     accumulates per plane as acc ← acc + v_i·c_i in ascending i —
@@ -323,7 +323,7 @@ def embedding_near_dup_pairs(
     # (`banded_signatures_arrow` — bit-identical to the former
     # `near_dup_band_cols` expression chains, which remain the
     # spec/reference implementation) instead of a bands×bits×64-term
-    # projection, so the janino-64KB `materialize_wide` detour is no
+    # projection, so the janino-64KB codegen-off materialize detour is no
     # longer needed and the plain materialize applies.
     sig = _materialize(
         banded_signatures_arrow(
@@ -334,7 +334,7 @@ def embedding_near_dup_pairs(
         F.struct(F.lit(j).alias("band_id"), F.col(f"band_{j}").alias("band_val"))
         for j in range(bands)
     ]
-    # band rows carry ONLY ids (the minhash_lsh_pairs rule): the
+    # band rows carry ONLY ids (the minhash_lsh_pairs_portable rule): the
     # 512-byte vector would otherwise cross the band-join shuffle
     # `bands`× on both sides and ride through the candidate distinct;
     # vectors join back from the materialized signature table once
@@ -592,7 +592,7 @@ def knn_lsh(
         )
         for b in range(bands)
     ]
-    # band rows carry ONLY ids (the minhash_lsh_pairs rule): the
+    # band rows carry ONLY ids (the minhash_lsh_pairs_portable rule): the
     # vector arrays would otherwise cross the band join `bands`× per
     # side and inflate the candidate distinct; they join back from
     # the materialized signature table per candidate instead

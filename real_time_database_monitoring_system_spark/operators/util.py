@@ -2,43 +2,9 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
-
-
-def materialize_wide(df: DataFrame) -> DataFrame:
-    """`materialize` for plans whose projection is too WIDE for
-    whole-stage codegen — the eager job runs with
-    `spark.sql.codegen.wholeStage=false`, then the flag is restored.
-
-    Why this exists (measured on the 48-plane LSH signature table,
-    8 bands × 6 bits × 64-d = 3072 subscript-multiply-add terms in one
-    Project): inside whole-stage codegen the fused `processNext()`
-    cannot be split into sub-methods (the child's columns are bound to
-    local variables, so `splitExpressions` has nothing row-shaped to
-    re-read them from) — janino hits the JVM's 64 KB method bytecode
-    limit, logs `Failed to compile`, and Spark silently falls back to
-    INTERPRETED row eval. Worse, failed compiles are not cached, so
-    every job pays the ~2 s doomed compile again. With whole-stage off,
-    the non-fused ProjectExec compiles via `UnsafeProjection` with
-    row-based method splitting — hundreds of small JIT-friendly
-    methods, compiled once and cached: 2.9 s → 1.3 s warm at sf0.1 and
-    the fixed failed-compile tax gone from every downstream action.
-    The arithmetic is the identical IEEE sequence either way (compiled
-    vs interpreted vs split evaluate the same expression tree), so
-    results are bit-identical and oracles are untouched.
-
-    The conf flip is scoped to the EAGER materialize job inside this
-    function (single-threaded callers — tests, bench, the driver;
-    restored in `finally`). Downstream stages read stored partitions
-    and keep normal whole-stage codegen."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
-        return materialize(df)
-    finally:
-        spark.conf.set("spark.sql.codegen.wholeStage", prev)
-
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -186,42 +152,18 @@ def disc_quantiles_from_counts(
     row). `quantiles` entries are (alias, num, den).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
-    drop_key = False
-    if not keys:
-        # global quantiles: a constant group key keeps one code path
-        df = df.withColumn("_g", F.lit(1))
-        keys = ["_g"]
-        drop_key = True
-    groups = df.select(*keys).distinct()
-    counts = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(*keys, col)
-        .agg(F.count("*").alias("_c"))
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wn = Window.partitionBy(*keys)
-    cum = counts.select(
-        *keys,
-        F.col(col),
-        F.sum("_c").over(w).alias("_cum"),
-        F.sum("_c").over(wn).alias("_n"),
-    )
-    picked = cum.groupBy(*keys).agg(
-        *[
-            F.min(
-                F.when(F.col("_cum") * den >= F.col("_n") * num, F.col(col))
-            ).alias(alias)
-            for alias, num, den in quantiles
-        ]
-    )
-    out = groups.join(picked, keys, "left")
-    return out.drop("_g") if drop_key else out
+    def pick(cum: DataFrame, keys: list[str]) -> DataFrame:
+        return cum.groupBy(*keys).agg(
+            *[
+                F.min(
+                    F.when(F.col("_cum") * den >= F.col("_n") * num, F.col(col))
+                ).alias(alias)
+                for alias, num, den in quantiles
+            ]
+        )
+
+    return _quantiles_from_counts(df, keys, col, None, pick)
 
 
 def cont_quantiles_from_counts(
@@ -264,10 +206,55 @@ def cont_quantiles_from_counts(
     complete-mode state here, the `mwu_from_value_counts` pattern);
     rows then contribute `weight` occurrences instead of 1."""
     from pyspark.sql import functions as F
+
+    def pick(cum: DataFrame, keys: list[str]) -> DataFrame:
+        aggs = []
+        finals = list(keys)
+        for alias, num, den in quantiles:
+            # per-group integer target: i = ((n-1)*num) div den, rem = mod
+            i_q = F.expr(f"((_n - 1) * {num}) div {den}")
+            aggs.append(
+                F.min(F.when(F.col("_cum") > i_q, F.col(col))).alias(f"_lo_{alias}")
+            )
+            aggs.append(
+                F.min(F.when(F.col("_cum") > i_q + 1, F.col(col))).alias(f"_hi_{alias}")
+            )
+            aggs.append(
+                F.min(F.expr(f"((_n - 1) * {num}) % {den}")).alias(f"_rem_{alias}")
+            )
+            finals.append(
+                F.expr(
+                    f"CAST(_lo_{alias} AS DOUBLE) + (CAST(_rem_{alias} AS DOUBLE)"
+                    f" * (CAST(coalesce(_hi_{alias}, _lo_{alias}) AS DOUBLE)"
+                    f" - CAST(_lo_{alias} AS DOUBLE))) / CAST({den} AS DOUBLE)"
+                ).alias(alias)
+            )
+        return cum.groupBy(*keys).agg(*aggs).select(*finals)
+
+    return _quantiles_from_counts(df, keys, col, weight, pick)
+
+
+def _quantiles_from_counts(
+    df: DataFrame,
+    keys: list[str],
+    col: str,
+    weight: str | None,
+    pick: Callable[[DataFrame, list[str]], DataFrame],
+) -> DataFrame:
+    """The counts-conversion core both quantile helpers share: the
+    per-group (keys…, value, _cum, _n) cumulative-count relation over
+    the non-NULL values, handed to ``pick(cum, keys)`` for the
+    per-group quantile rule, then left-joined back to every group so
+    all-NULL groups emit NULL quantiles. No keys → one constant `_g`
+    group (dropped again on the way out), so global quantiles share
+    the code path. ``weight`` names a count column when `df` already
+    is a per-value count relation; otherwise each row counts once."""
+    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     drop_key = False
     if not keys:
+        # global quantiles: a constant group key keeps one code path
         df = df.withColumn("_g", F.lit(1))
         keys = ["_g"]
         drop_key = True
@@ -290,29 +277,7 @@ def cont_quantiles_from_counts(
         F.sum("_c").over(w).alias("_cum"),
         F.sum("_c").over(wn).alias("_n"),
     )
-    aggs = []
-    finals = list(keys)
-    for alias, num, den in quantiles:
-        # per-group integer target: i = ((n-1)*num) div den, rem = mod
-        i_q = F.expr(f"((_n - 1) * {num}) div {den}")
-        aggs.append(
-            F.min(F.when(F.col("_cum") > i_q, F.col(col))).alias(f"_lo_{alias}")
-        )
-        aggs.append(
-            F.min(F.when(F.col("_cum") > i_q + 1, F.col(col))).alias(f"_hi_{alias}")
-        )
-        aggs.append(
-            F.min(F.expr(f"((_n - 1) * {num}) % {den}")).alias(f"_rem_{alias}")
-        )
-        finals.append(
-            F.expr(
-                f"CAST(_lo_{alias} AS DOUBLE) + (CAST(_rem_{alias} AS DOUBLE)"
-                f" * (CAST(coalesce(_hi_{alias}, _lo_{alias}) AS DOUBLE)"
-                f" - CAST(_lo_{alias} AS DOUBLE))) / CAST({den} AS DOUBLE)"
-            ).alias(alias)
-        )
-    picked = cum.groupBy(*keys).agg(*aggs).select(*finals)
-    out = groups.join(picked, keys, "left")
+    out = groups.join(pick(cum, keys), keys, "left")
     return out.drop("_g") if drop_key else out
 
 

@@ -10,7 +10,7 @@ join is shuffle-free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -44,12 +44,6 @@ def write_date_partitioned(
     df.withColumn(partition_col, F.to_date(ts_col)).write.mode("overwrite").partitionBy(
         partition_col
     ).parquet(path)
-
-
-def bucketed_join_ready(spark: SparkSession, left: str, right: str) -> bool:
-    """True when both tables exist and bucketing will be used."""
-    exists = all(spark.catalog.tableExists(t) for t in (left, right))
-    return exists and spark.conf.get("spark.sql.sources.bucketing.enabled") == "true"
 
 
 def zvalue_sql(col_a: str, col_b: str, bits: int = 16) -> str:

@@ -226,12 +226,6 @@ def write_sharded_corpus(documents: DataFrame, path: str, budget_tokens: int = 2
     )
 
 
-def append_with_timestamp(src: DataFrame, ts_col: str = "archive_timestamp") -> DataFrame:
-    """S9 INSERT…SELECT archive shape (views.py:947-951): source rows
-    stamped with the archive time, ready for ``.write.mode('append')``."""
-    return src.withColumn(ts_col, F.current_timestamp())
-
-
 def write_alert_maildir(
     df: DataFrame,
     path: str,

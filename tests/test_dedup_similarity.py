@@ -15,28 +15,9 @@ from real_time_database_monitoring_system_spark.operators import (
 from real_time_database_monitoring_system_spark.sources.registry import load_table
 
 
-def test_minhash_finds_planted_duplicate(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    # plant a near-duplicate of doc 0 (same source, text + one word)
-    dup = docs.filter(F.col("doc_id") == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" extra")).alias("text"),
-        "lang",
-        "source",
-        (F.col("n_chars") + 6).alias("n_chars"),
-    )
-    with_dup = docs.unionByName(dup)
-    pairs = dedup.minhash_lsh_pairs(with_dup, threshold=0.5).collect()
-    assert any(r.doc_a == 0 and r.doc_b == 100000 for r in pairs), pairs
-
-
 def test_minhash_portable_finds_planted_duplicate_and_agrees(spark, sf_dir):
-    """The portable (md5-affine) MinHash variant must surface the same
-    planted near-duplicate as the xxhash64 form, and at a fixed
-    verification threshold the two variants' verified pair sets agree
-    on the real corpus (verification is exact Jaccard in both; only
-    the candidate generation differs, and both banding schemes must
-    recall a 0.5+ Jaccard pair)."""
+    """MinHash+LSH (md5-affine family) must surface a planted
+    near-duplicate — doc 0's text plus one word — at threshold 0.5."""
     docs = load_table(spark, sf_dir, "documents")
     dup = docs.filter(F.col("doc_id") == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
@@ -48,15 +29,6 @@ def test_minhash_portable_finds_planted_duplicate_and_agrees(spark, sf_dir):
     with_dup = docs.unionByName(dup)
     pairs = dedup.minhash_lsh_pairs_portable(with_dup, threshold=0.5).collect()
     assert any(r.doc_a == 0 and r.doc_b == 100000 for r in pairs), pairs
-    fast = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()
-    }
-    portable = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.minhash_lsh_pairs_portable(docs, threshold=0.5).collect()
-    }
-    assert fast == portable, f"variants disagree: {fast ^ portable}"
 
 
 def test_minhash_candidates_superset_of_high_jaccard(spark, sf_dir):
@@ -69,7 +41,7 @@ def test_minhash_candidates_superset_of_high_jaccard(spark, sf_dir):
     }
     lsh = {
         (r.doc_a, r.doc_b)
-        for r in dedup.minhash_lsh_pairs(docs, threshold=0.0).collect()
+        for r in dedup.minhash_lsh_pairs_portable(docs, threshold=0.0).collect()
     }
     missed = exact - lsh
     assert len(missed) <= max(1, len(exact) // 5), f"LSH missed {missed}"
@@ -102,7 +74,7 @@ def test_simhash_identical_docs_distance_zero(spark, sf_dir):
     dup = docs.filter(F.col("doc_id") == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"), "text", "lang", "source", "n_chars"
     )
-    pairs = dedup.simhash_pairs(docs.unionByName(dup), max_hamming=0).collect()
+    pairs = dedup.simhash_pairs_portable(docs.unionByName(dup), max_hamming=0).collect()
     assert any(r.doc_a == 0 and r.doc_b == 100000 and r.hamming == 0 for r in pairs)
 
 
@@ -133,7 +105,7 @@ def test_simhash_banding_equals_allpairs(spark, sf_dir):
     formulation for every r (hamming <= r implies an exact match on at
     least one of the r+1 bands)."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = dedup.simhash_64(docs).join(docs.select("doc_id", "source"), "doc_id")
+    sh = dedup.portable_simhash(docs).join(docs.select("doc_id", "source"), "doc_id")
     a = sh.select("source", F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"))
     b = sh.select("source", F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"))
     for r in (0, 3, 6):
@@ -150,7 +122,7 @@ def test_simhash_banding_equals_allpairs(spark, sf_dir):
         )
         banded = sorted(
             (row.source, row.doc_a, row.doc_b, row.hamming)
-            for row in dedup.simhash_pairs(docs, max_hamming=r).collect()
+            for row in dedup.simhash_pairs_portable(docs, max_hamming=r).collect()
         )
         assert banded == brute, f"banding lost/invented pairs at r={r}"
 
@@ -159,7 +131,7 @@ def test_simhash_plan_has_no_allpairs_join(spark, sf_dir):
     """The physical plan must be a hash/merge equi-join on the band
     key, not a nested-loop/cartesian within source blocks."""
     docs = load_table(spark, sf_dir, "documents")
-    plan = dedup.simhash_pairs(docs)._jdf.queryExecution().executedPlan().toString()
+    plan = dedup.simhash_pairs_portable(docs)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

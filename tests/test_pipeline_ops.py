@@ -199,7 +199,7 @@ def test_operators_on_empty_and_singleton_inputs(spark):
         assert text.fingerprint(df).count() == n_docs
         assert dedup.exact_dedup(df).count() == n_docs
         assert dedup.ngram_jaccard_pairs(df).count() == 0
-        assert dedup.simhash_pairs(df).count() == 0
+        assert dedup.simhash_pairs_portable(df).count() == 0
         # keeper_list with no duplicate evidence: everyone keeps themselves
         keepers = dedup.keeper_list(df, dedup.ngram_jaccard_pairs(df, threshold=1.1)).collect()
         assert len(keepers) == n_docs and all(r.is_keeper for r in keepers)

@@ -297,7 +297,7 @@ def test_cohort_column_path_matches_parse_path(spark):
 # demonstrated rather than asserted. The generic local/reliable parity
 # test (test_plans.py) covers ngram_jaccard; this one drives the exact
 # pipeline whose signature-pass materialization hit the boundary
-# (similarity.embedding_near_dup_pairs' materialize_wide'd signature
+# (similarity.embedding_near_dup_pairs' materialized signature
 # table) and proves (a) identical pairs, (b) checkpoint FILES actually
 # written to the configured dir — i.e. the signature relation really
 # moved from executor block storage to the durable store.

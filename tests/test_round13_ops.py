@@ -310,6 +310,36 @@ def test_jt_from_cell_counts_spark_path(spark):
     assert got["b"]["n_total"] == 3
 
 
+def test_jt_from_cell_counts_sums_split_cells(spark):
+    """A (type, h, cents) cell split over two rows counts as their sum
+    (a streaming state or a union of partial relations carries such
+    rows); it must not overwrite the other half."""
+    schema = "event_type string, h bigint, cents bigint, c bigint"
+    merged = [("a", 1, 10, 3), ("a", 2, 20, 4), ("a", 2, 5, 2)]
+    split = [("a", 1, 10, 1), ("a", 1, 10, 2), ("a", 2, 20, 4), ("a", 2, 5, 2)]
+    jt2 = [
+        analytics.jt_from_cell_counts(spark.createDataFrame(rows, schema)).first()["jt2"]
+        for rows in (merged, split)
+    ]
+    assert jt2[0] == _brute_jt2([(1, 10, 3), (2, 20, 4), (2, 5, 2)])
+    assert jt2[1] == jt2[0]
+
+
+def test_jt_from_cell_counts_bigint_cents_exact_beside_null(spark):
+    """Cents 2^53 and 2^53 + 1 are distinct values even when the same
+    type holds a NULL-cents row: the NULL must not turn the group's
+    cents into float64, where the two collapse into a tie."""
+    big = 2**53
+    rows = [("a", 1, big, 1), ("a", 2, big + 1, 1), ("a", 3, None, 1)]
+    pc = spark.createDataFrame(
+        rows, "event_type string, h bigint, cents bigint, c bigint"
+    )
+    got = analytics.jt_from_cell_counts(pc).first()
+    # one strictly increasing pair across hours → doubled count 2 (a tie gives 1)
+    assert got["jt2"] == 2
+    assert got["n_total"] == 3
+
+
 # ---------------------------------------------------------------------------
 # Sign-LSH bands: vectorized Arrow pass vs the expression-chain spec
 # ---------------------------------------------------------------------------
