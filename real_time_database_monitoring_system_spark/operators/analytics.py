@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from .util import materialize as _materialize
 from .util import disc_quantiles_from_counts as _disc_quantiles
+from .util import require_alphabet_cap as _require_alphabet_cap
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -1831,28 +1832,10 @@ def hl_from_value_counts(per_value: DataFrame) -> DataFrame:
     boundary, not as an opaque executor OOM deep in the selection
     pass."""
     per_value = _materialize(per_value)
-    # Alphabet-cap guard (ADVICE r10): each type's whole alphabet is
-    # buffered as one in-memory group by the selection pass, so an
-    # unquantized/high-cardinality value domain must fail loudly at
-    # the operator boundary, not as an executor OOM. per_value is
-    # already materialized, so the count reads checkpointed blocks,
-    # not the source.
-    guard = (
-        per_value.groupBy("event_type")
-        .count()
-        .agg(F.max("count").alias("worst"))
-        .first()
+    _require_alphabet_cap(
+        per_value, "event_type", "cents", _HL_MAX_ALPHABET_ROWS,
+        "hl_from_value_counts",
     )
-    worst = guard["worst"] or 0
-    if worst > _HL_MAX_ALPHABET_ROWS:
-        raise ValueError(
-            "hl_from_value_counts: some event_type has a value alphabet of "
-            f"{worst} distinct values, exceeding the per-type dense-grid "
-            f"cap of {_HL_MAX_ALPHABET_ROWS}. The selection pass buffers "
-            "one type's alphabet per task; quantize the value axis (e.g. "
-            "coarser cents bucketing) before calling, or the group buffer "
-            "will OOM."
-        )
     # The four target ranks are Spark expressions, NOT Python: npairs
     # is the ANSI bigint product (overflow stays loud) and k_ci is the
     # shared HL_K_CI_SQL — the operator's one floating computation
@@ -3525,6 +3508,12 @@ def jonckheere_terpstra(events: DataFrame) -> DataFrame:
     return jt_from_cell_counts(per_cell)
 
 
+# Cap on the per-type DISTINCT cents feeding `_jt_grid_group`: its
+# dense matrices are 24 × V int64 (~19 MB each at the cap), and the
+# group it buffers is the type's (hour, cents) cells.
+_JT_MAX_ALPHABET = 100_000
+
+
 def _jt_grid_group(pdf):
     """Per-type doubled JT statistic over the hour×alphabet count
     matrix (runs inside `applyInPandas`; see `jt_from_cell_counts`).
@@ -3595,8 +3584,14 @@ def jt_from_cell_counts(per_cell: DataFrame) -> DataFrame:
     overflow boundary — stay Spark expressions, unchanged. Proven
     against the former shape on random fixtures
     (tests/test_round13_ops.py) and the DuckDB oracle at
-    sf0.001/0.01/0.1."""
+    sf0.001/0.01/0.1. Like `hl_from_value_counts`, NOT fully lazy: the
+    per-type alphabet cap (`_JT_MAX_ALPHABET` distinct cents) runs one
+    small eager job, so an over-cap type raises ValueError here rather
+    than dying as an executor OOM in the Arrow pass."""
     per_cell = _materialize(per_cell)
+    _require_alphabet_cap(
+        per_cell, "event_type", "cents", _JT_MAX_ALPHABET, "jt_from_cell_counts"
+    )
     et_type = per_cell.schema["event_type"].dataType.simpleString()
     # NULL cents never enter jt2 and must not cross the Arrow boundary:
     # a NULL in the group would hand `cents` to pandas as float64,

@@ -42,6 +42,9 @@ adds on top of the reference's monitoring queries (SURVEY.md §6).
 
 from __future__ import annotations
 
+import weakref
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -111,10 +114,10 @@ def _dist_sq_sql(vec_name: str, centroid: list[int]) -> str:
     ``vec_name`` and a literal centroid: Σ(a−b)² ≤ 64·(2^21)² ≪ 2^63,
     fold over longs.
 
-    The WHOLE expression is one SQL string (extending the
-    `_plane_dot_sql` py4j rule from the centroid array literal to the
-    fold itself): the former Column-built form (`F.zip_with` +
-    `F.aggregate` with Python lambdas) cost dozens of py4j round-trips
+    The WHOLE expression is one SQL string, parsed JVM-side in one
+    call instead of a py4j round-trip per literal or lambda: the
+    former Column-built form (`F.zip_with` + `F.aggregate` with
+    Python lambdas) cost dozens of py4j round-trips
     per centroid — k=8 centroids × (2 Lloyd iterations + the
     assignment projection) measured ~0.23 s of pure driver-side plan
     CONSTRUCTION per query call (r13 instrumentation). One parsed
@@ -176,21 +179,29 @@ def _quantized_table(embeddings: DataFrame) -> DataFrame:
     )
 
 
-# one parsed expression per dimension sum (the _plane_dot_sql py4j
-# rule), built ONCE at import: the 64 F.expr round-trips measured
-# 0.115 s per kmeans_fit call when rebuilt per iteration-loop (r13
-# instrumentation). Static column objects over a fixed schema are
-# reusable across plans and sessions within one JVM gateway.
-_DIM_SUMS: list[Column] | None = None
+# Static Column groups over a fixed schema, built once per live
+# SparkContext: rebuilding them per call costs a py4j round-trip per
+# F.expr (the 64 dimension sums measured 0.115 s per kmeans_fit call,
+# the PCA groups 1.08 s per call — r13 instrumentation). A Column is a
+# handle into the JVM that made it, so a stopped or relaunched context
+# must rebuild rather than reuse it.
+_EXPR_CACHE: dict = {}
+
+
+def _per_context(key, build):
+    """``build()``, memoized per (key, live SparkContext)."""
+    sc = SparkContext._active_spark_context
+    hit = _EXPR_CACHE.get(key)
+    if hit is None or hit[0]() is not sc:
+        hit = _EXPR_CACHE[key] = (weakref.ref(sc), build())
+    return hit[1]
 
 
 def _dim_sums() -> list[Column]:
-    global _DIM_SUMS
-    if _DIM_SUMS is None:
-        _DIM_SUMS = [
-            F.expr(f"sum(qvec[{i}])").alias(f"s_{i}") for i in range(64)
-        ]
-    return _DIM_SUMS
+    return _per_context(
+        "dim_sums",
+        lambda: [F.expr(f"sum(qvec[{i}])").alias(f"s_{i}") for i in range(64)],
+    )
 
 
 def _lloyd(qv: DataFrame, k: int, n_iter: int) -> dict[int, list[int]]:
@@ -628,8 +639,8 @@ def pca_power_iter(embeddings: DataFrame, dims: int = 64) -> DataFrame:
     # compiles: measured 15.7 s → ~1 s at sf0.1). Same arithmetic
     # (BIGINT product, DECIMAL(38,0) accumulation), same values.
     # All five expression groups are STATIC in dims, so they are built
-    # once per process (`_pca_exprs`) — rebuilding them per call cost
-    # 1.08 s of py4j round-trips (r13 instrumentation, the `_dim_sums`
+    # once per SparkContext (`_pca_exprs`) — rebuilding them per call
+    # cost 1.08 s of py4j round-trips (r13 instrumentation, the `_dim_sums`
     # rule).
     rowsum, s1_aggs, v1_cols, idot, s2_aggs, l_cols, dim_structs = _pca_exprs(
         dims
@@ -653,76 +664,70 @@ def pca_power_iter(embeddings: DataFrame, dims: int = 64) -> DataFrame:
     )
 
 
-_PCA_EXPRS: dict[int, tuple] = {}
-_PCA_NORMS: dict[tuple[int, str, str], Column] = {}
-
-
 def _pca_norm_col(dims: int, pre: str, alias: str) -> Column:
     """The left-associated squared-norm chain over ``pre``_d columns —
-    static per (dims, prefix), built once per process."""
-    key = (dims, pre, alias)
-    if key not in _PCA_NORMS:
-        chain = _pca_chain(
-            [
-                f"CAST({pre}_{d} AS DOUBLE) * CAST({pre}_{d} AS DOUBLE)"
-                for d in range(dims)
-            ]
-        )
-        _PCA_NORMS[key] = F.expr(f"({chain})").alias(alias)
-    return _PCA_NORMS[key]
+    static per (dims, prefix), built once per context."""
+    chain = _pca_chain(
+        [f"CAST({pre}_{d} AS DOUBLE) * CAST({pre}_{d} AS DOUBLE)" for d in range(dims)]
+    )
+    return _per_context(
+        ("pca_norm", dims, pre, alias), lambda: F.expr(f"({chain})").alias(alias)
+    )
 
 
 def _pca_exprs(dims: int) -> tuple:
     """The static expression groups of `pca_power_iter`, built once
-    per process: (rowsum, s1 aggregates, v1 projection, idot, s2
+    per context: (rowsum, s1 aggregates, v1 projection, idot, s2
     aggregates, loading projection, dim structs). The generated TEXT
     is byte-identical to the former per-call construction, so both
     engines' parse trees — and every IEEE operation sequence — are
     unchanged."""
-    if dims not in _PCA_EXPRS:
-        sumq = _pca_chain([f"qvec[{d}]" for d in range(dims)])
-        rowsum = F.expr(f"({sumq})").alias("rowsum")
-        s1_aggs = [
-            F.expr(f"SUM(CAST(qvec[{d}] * rowsum AS DECIMAL(38,0)))").alias(
-                f"s1_{d}"
-            )
-            for d in range(dims)
-        ]
-        v1_cols = [
-            F.expr(
-                f"CASE WHEN n1sq > 0.0 THEN"
-                f" round(CAST(s1_{d} AS DOUBLE) / sqrt(n1sq), 6) END"
-            ).alias(f"v1_{d}")
-            for d in range(dims)
-        ]
-        dot1 = _pca_chain([f"qvec[{d}] * v1_{d}" for d in range(dims)])
-        idot = F.expr(
-            f"CAST(round(round({dot1}, 6) * 1000000.0, 0) AS DECIMAL(38,0))"
-        ).alias("idot")
-        s2_aggs = [
-            F.expr(f"SUM(qvec[{d}] * idot)").alias(f"s2_{d}")
-            for d in range(dims)
-        ]
-        l_cols = [
-            F.expr(
-                f"CASE WHEN n2sq > 0.0 THEN"
-                f" round(CAST(s2_{d} AS DOUBLE) / sqrt(n2sq), 9) END"
-            ).alias(f"l_{d}")
-            for d in range(dims)
-        ]
-        dim_structs = F.array(
-            *[
-                F.struct(F.lit(d).alias("dim"), F.col(f"l_{d}").alias("loading"))
-                for d in range(dims)
-            ]
+    return _per_context(("pca", dims), lambda: _build_pca_exprs(dims))
+
+
+def _build_pca_exprs(dims: int) -> tuple:
+    sumq = _pca_chain([f"qvec[{d}]" for d in range(dims)])
+    rowsum = F.expr(f"({sumq})").alias("rowsum")
+    s1_aggs = [
+        F.expr(f"SUM(CAST(qvec[{d}] * rowsum AS DECIMAL(38,0)))").alias(
+            f"s1_{d}"
         )
-        _PCA_EXPRS[dims] = (
-            rowsum,
-            s1_aggs,
-            v1_cols,
-            idot,
-            s2_aggs,
-            l_cols,
-            dim_structs,
-        )
-    return _PCA_EXPRS[dims]
+        for d in range(dims)
+    ]
+    v1_cols = [
+        F.expr(
+            f"CASE WHEN n1sq > 0.0 THEN"
+            f" round(CAST(s1_{d} AS DOUBLE) / sqrt(n1sq), 6) END"
+        ).alias(f"v1_{d}")
+        for d in range(dims)
+    ]
+    dot1 = _pca_chain([f"qvec[{d}] * v1_{d}" for d in range(dims)])
+    idot = F.expr(
+        f"CAST(round(round({dot1}, 6) * 1000000.0, 0) AS DECIMAL(38,0))"
+    ).alias("idot")
+    s2_aggs = [
+        F.expr(f"SUM(qvec[{d}] * idot)").alias(f"s2_{d}")
+        for d in range(dims)
+    ]
+    l_cols = [
+        F.expr(
+            f"CASE WHEN n2sq > 0.0 THEN"
+            f" round(CAST(s2_{d} AS DOUBLE) / sqrt(n2sq), 9) END"
+        ).alias(f"l_{d}")
+        for d in range(dims)
+    ]
+    dim_structs = F.array(
+        *[
+            F.struct(F.lit(d).alias("dim"), F.col(f"l_{d}").alias("loading"))
+            for d in range(dims)
+        ]
+    )
+    return (
+        rowsum,
+        s1_aggs,
+        v1_cols,
+        idot,
+        s2_aggs,
+        l_cols,
+        dim_structs,
+    )

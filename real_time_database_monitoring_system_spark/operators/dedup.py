@@ -270,8 +270,8 @@ def portable_bands(
     # one parsed expression per aggregate / per band struct — the
     # Column-by-Column form costs ~8 py4j round-trips per hash of
     # driver time on EVERY construction (measured ~12× slower at
-    # n=128; see portable_simhash / similarity._plane_dot_sql for the same
-    # rule). Literal types match the DSL form (int < 2^31 → INT,
+    # n=128), while one parsed string is a single JVM-side parse
+    # (portable_simhash follows the same rule). Literal types match the DSL form (int < 2^31 → INT,
     # 2^61−1 → BIGINT), so the arithmetic and results are identical.
     mins = [
         F.expr(
@@ -653,8 +653,8 @@ def portable_simhash(documents: DataFrame) -> DataFrame:
         )
     )
     # one parsed expression per aggregate / per assembly term — the
-    # Column-by-Column form costs ~1k py4j round-trips of driver time
-    # (see similarity._plane_dot_sql for the measurement)
+    # Column-by-Column form costs ~1k py4j round-trips of driver time,
+    # one parsed string a single JVM-side parse
     sums = [
         F.expr(f"sum(CASE WHEN (shiftright(h, {b}) & 1) = 1 THEN 1 ELSE -1 END)").alias(f"s_{b}")
         for b in range(60)

@@ -10,6 +10,12 @@ array<float>`, 64-dim).
   planes) bucket both sides; candidates are scored only within
   matching buckets (multi-probe across bands). This is the 100 TB
   path: the candidate join replaces the all-pairs cross product.
+- Literal-plane projections: every dot product against seeded planes
+  (sign-LSH bands for `knn_lsh` and `embedding_near_dup_pairs`, the
+  Johnson–Lindenstrauss dots of `random_projection` and
+  `knn_projected`) goes through ONE numpy kernel, `_plane_dots`, inside
+  a `mapInArrow` pass. Its fold order matches DuckDB's sequential
+  `list_dot_product`, so the oracle twins agree bit for bit.
 """
 
 from __future__ import annotations
@@ -85,57 +91,80 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def _plane_dot_sql(vec_name: str, plane: list[float]) -> str:
-    """SQL text for the left-to-right fold dot product of column
-    ``vec_name`` with a literal plane. Built as ONE parsed expression
-    instead of per-literal Column objects: a 64-coefficient plane built
-    via ``F.array(*[F.lit(v) ...])`` costs ~65 py4j round-trips, and a
-    48-plane signature ~3k — measured at ~4 s of driver time per query
-    at any data size. One `F.expr` string parses JVM-side in
-    microseconds.
+def _plane_dots(col, planes):
+    """The package's ONE dot product against literal planes: the
+    ``(n, n_planes)`` float64 accumulator of an Arrow ``list<double>``
+    column ``col`` against the ``(n_planes, dim)`` matrix ``planes``,
+    plus the per-row ``bad`` mask. Runs inside the `mapInArrow` workers
+    of `banded_signatures_arrow` and `plane_dots_arrow`.
 
-    The expression is a SCALAR left-associated chain
-    (`0.0 + v[0]·c0 + v[1]·c1 + …`), not an
-    `aggregate(zip_with(...))` fold: higher-order functions run on
-    Spark's interpreted evaluator per element (boxed doubles, closure
-    dispatch) while the scalar chain stays inside whole-stage codegen
-    — measured 13.3 s → 8.6 s warm for 3.2M 64-d dots. The IEEE
-    operation sequence is IDENTICAL to the fold (same promotions,
-    same add order — acc starts at 0.0, adds each product left to
-    right), so every consumer's doubles are bit-identical (diff count
-    0 over 200k real vectors) and the DuckDB oracles are untouched.
+    Per plane the dot accumulates acc ← acc + v_i·c_i in ascending i,
+    starting at 0.0: numpy's elementwise multiply and add are the same
+    correctly-rounded IEEE operations as the left-associated SQL chain
+    `0.0 + v[0]·c0 + v[1]·c1 + …` and DuckDB's sequential
+    `list_dot_product`, with no FMA fusion and no reassociation, so
+    every consumer's doubles are bit-identical to those folds (pinned
+    against a test-side chain spec, tests/plane_chain_spec.py).
+    Corner cases follow the chain: a NULL vector or a vector with a
+    NULL element is a ``bad`` row (its accumulator row is junk the
+    emitters override); NaN elements propagate; a vector shorter than
+    the plane width raises `ValueError` (the chain's ANSI array index
+    would refuse it too); a longer vector uses its first ``dim``
+    elements."""
+    import numpy as np
 
-    For Rademacher (±1.0) planes the chain drops the multiplications
-    entirely: IEEE multiplication by +1.0 is the identity and by −1.0
-    an exact sign flip, and `acc + (−x) ≡ acc − x`, so
-    `0.0 + v₀ − v₁ + …` is BIT-IDENTICAL to the general
-    `0.0 + v₀·c₀ + v₁·c₁ + …` while halving the expression tree
-    (smaller parse/analyze per call, ~2× fewer per-row ops; verified
-    0-diff over the corpus; pinned by
-    tests/test_round8_wave6.py::test_pm_chain_bit_identical). Gaussian
-    planes (`knn_lsh`) keep the general multiply chain."""
-    if all(c in (1.0, -1.0) for c in plane):
-        parts = "".join(
-            f" {'+' if c == 1.0 else '-'} CAST({vec_name}[{i}] AS DOUBLE)"
-            for i, c in enumerate(plane)
+    n = len(col)
+    n_planes, dim = planes.shape
+    acc = np.zeros((n, n_planes), dtype=np.float64)
+    row_null = col.is_null().to_numpy(zero_copy_only=False)
+    if n == 0:
+        return acc, row_null
+    offs = col.offsets.to_numpy()
+    lengths = offs[1:] - offs[:-1]
+    if ((lengths < dim) & ~row_null).any():
+        raise ValueError(
+            f"vector shorter than the {dim}-dim plane width (the expression "
+            "chain's ANSI array index would equally refuse it)"
         )
-        return f"(CAST(0.0 AS DOUBLE){parts})"
-    terms = " + ".join(
-        f"CAST({vec_name}[{i}] AS DOUBLE) * CAST({c!r} AS DOUBLE)"
-        for i, c in enumerate(plane)
+    vals = col.values
+    v_np = vals.to_numpy(zero_copy_only=False)
+    if len(v_np) == 0:
+        return acc, row_null  # every row is NULL
+    idx = offs[:-1].astype(np.int64)[:, None] + np.arange(dim)[None, :]
+    # NULL rows read clamped junk; they are flagged bad
+    idx = np.clip(idx, 0, len(v_np) - 1)
+    v = v_np[idx]  # (n, dim)
+    bad = row_null.copy()
+    if vals.null_count:
+        bad |= vals.is_null().to_numpy(zero_copy_only=False)[idx].any(axis=1)
+    for i in range(dim):
+        acc += v[:, i : i + 1] * planes[:, i][None, :]
+    return acc, bad
+
+
+def _plane_pass(emb_d: DataFrame, planes, out_cols: dict[str, str], emit) -> DataFrame:
+    """One `mapInArrow` pass over ``emb_d`` (… vec: array<double> …):
+    each batch's `_plane_dots` ``(acc, bad)`` go to ``emit``, whose
+    Arrow arrays are appended as ``out_cols`` (name → Spark type)."""
+    coef = [list(p) for p in planes]
+    names = list(out_cols)
+    schema = ", ".join(
+        [f"{f.name} {f.dataType.simpleString()}" for f in emb_d.schema.fields]
+        + [f"{n} {t}" for n, t in out_cols.items()]
     )
-    return f"(CAST(0.0 AS DOUBLE) + {terms})"
 
+    def gen(it):
+        import numpy as np
+        import pyarrow as pa
 
-def lsh_signature(vec_name: str, planes: list[list[float]]) -> Column:
-    """Sign-bit signature of column ``vec_name`` against literal
-    hyperplanes → int. Single parsed expression (see `_plane_dot_sql`)."""
-    terms = [
-        f"(CASE WHEN {_plane_dot_sql(vec_name, plane)} >= CAST(0.0 AS DOUBLE) "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, plane in enumerate(planes)
-    ]
-    return F.expr(" + ".join(terms))
+        C = np.array(coef, dtype=np.float64)
+        for batch in it:
+            acc, bad = _plane_dots(batch.column("vec"), C)
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + emit(acc, bad), names=batch.schema.names + names
+            )
+
+    return emb_d.mapInArrow(gen, schema)
 
 
 NEAR_DUP_BANDS = 8
@@ -144,103 +173,77 @@ NEAR_DUP_SEED = 104729
 
 
 def banded_signatures_arrow(
-    emb_d: DataFrame, bands: int, bits_per_band: int
+    emb_d: DataFrame,
+    bands: int,
+    bits_per_band: int,
+    planes: list[list[float]],
 ) -> DataFrame:
     """``emb_d`` (… vec: array<double> …) plus one packed sign-LSH
-    ``band_j`` INT column per band, computed in ONE vectorized Arrow
-    pass — the r13 replacement for projecting `near_dup_band_cols`'
-    bands×bits×64-term expression chains (guide §4.2: hand whole
-    batches to numpy instead of evaluating an 8 192-term projection
-    row-wise; at 8×16 bits the chain cost ~0.7 s of analysis + ~0.4 s
-    of optimization + ~2.2 s of split-method evaluation PER CALL on a
-    2 000-row table, and janino's 64 KB method limit forced the
-    codegen-off materialize detour — all three disappear).
+    ``band_j`` INT column per band, in ONE vectorized Arrow pass over
+    the `_plane_dots` kernel (guide §4.2: hand whole batches to numpy
+    instead of evaluating a bands×bits×dim-term projection row-wise).
+    Band j packs the sign bits of planes j·bits … (j+1)·bits − 1
+    little-endian — bit i set iff that plane's dot is ≥ 0.0 or NaN
+    (Spark compares NaN ≥ 0.0 as true). Bad rows (NULL vector or
+    element) get all-zero bands: the chain's NULL dot fails every
+    `>= 0` test. ``planes`` must hold bands × bits_per_band planes."""
+    if len(planes) != bands * bits_per_band:
+        raise ValueError(
+            "banded_signatures_arrow: need bands * bits_per_band planes, "
+            f"got {len(planes)}"
+        )
 
-    BIT-IDENTICAL to the expression chains, by construction: the dot
-    accumulates per plane as acc ← acc + v_i·c_i in ascending i —
-    numpy's elementwise multiply and add are the same correctly-
-    rounded IEEE operations the left-associated SQL chain performs
-    (for ±1 planes the chain's `acc ± v_i` ≡ `acc + (±1.0)·v_i`
-    exactly), with no FMA fusion and no reassociation. Corner cases
-    replicated and pinned by tests/test_round13_ops.py: NULL vectors
-    and vectors with a NULL element yield all-zero bands (the chain's
-    NULL dot fails every `>= 0` test); NaN elements set every bit
-    (Spark compares NaN ≥ 0.0 as true); vectors shorter than the
-    plane width raise loudly (the chain's ANSI array index would);
-    longer vectors use their first 64 elements. Verified band-for-band
-    identical to the chain on the full sf0.1 corpus and on
-    adversarial fixtures (exceptAll 0/0 both ways)."""
-    planes = rademacher_planes(bands * bits_per_band)
-    coef = [list(p) for p in planes]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in emb_d.schema.fields
-    ) + ", " + ", ".join(f"band_{j} int" for j in range(bands))
-
-    def gen(it):
+    def emit(acc, bad):
         import numpy as np
         import pyarrow as pa
 
-        C = np.array(coef, dtype=np.float64)  # (n_planes, 64)
-        n_planes, dim = C.shape
-        weights = 1 << np.arange(bits_per_band, dtype=np.int64)
-        for batch in it:
-            names = list(batch.schema.names)
-            n = batch.num_rows
-            if n == 0:
-                bandcols = [
-                    pa.array(np.zeros(0, dtype=np.int32)) for _ in range(bands)
-                ]
-            else:
-                col = batch.column(names.index("vec"))
-                row_null = col.is_null().to_numpy(zero_copy_only=False)
-                offs = col.offsets.to_numpy()
-                lengths = offs[1:] - offs[:-1]
-                if ((lengths < dim) & ~row_null).any():
-                    raise ValueError(
-                        "banded_signatures_arrow: vector shorter than the "
-                        f"{dim}-dim plane width (the expression chain's ANSI "
-                        "array index would equally refuse it)"
-                    )
-                vals = col.values
-                v_np = vals.to_numpy(zero_copy_only=False)
-                if len(v_np) == 0:
-                    # every row is NULL: all bands zero
-                    bits = np.zeros((n, n_planes), dtype=bool)
-                else:
-                    elem_null = (
-                        vals.is_null().to_numpy(zero_copy_only=False)
-                        if vals.null_count
-                        else None
-                    )
-                    starts = offs[:-1].astype(np.int64)
-                    idx = starts[:, None] + np.arange(dim)[None, :]
-                    # null rows read clamped junk, overridden below
-                    idx = np.clip(idx, 0, len(v_np) - 1)
-                    v = v_np[idx]  # (n, 64)
-                    bad = row_null.copy()
-                    if elem_null is not None:
-                        bad |= elem_null[idx].any(axis=1)
-                    acc = np.zeros((n, n_planes), dtype=np.float64)
-                    for i in range(dim):
-                        acc += v[:, i : i + 1] * C[:, i][None, :]
-                    bits = (acc >= 0.0) | np.isnan(acc)
-                    bits[bad] = False
-                bandcols = []
-                for j in range(bands):
-                    seg = bits[:, j * bits_per_band : (j + 1) * bits_per_band]
-                    bandcols.append(
-                        pa.array(
-                            (seg.astype(np.int64) * weights)
-                            .sum(axis=1)
-                            .astype(np.int32)
-                        )
-                    )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)] + bandcols,
-                names=names + [f"band_{j}" for j in range(bands)],
-            )
+        bits = ((acc >= 0.0) | np.isnan(acc)) & ~bad[:, None]
+        packed = (
+            bits.reshape(len(bits), bands, bits_per_band)
+            << np.arange(bits_per_band)
+        ).sum(axis=2)
+        return [pa.array(packed[:, j].astype(np.int32)) for j in range(bands)]
 
-    return emb_d.mapInArrow(gen, out_schema)
+    return _plane_pass(
+        emb_d, planes, {f"band_{j}": "int" for j in range(bands)}, emit
+    )
+
+
+def plane_dots_arrow(emb_d: DataFrame, planes: list[list[float]]) -> DataFrame:
+    """``emb_d`` (… vec: array<double> …) plus ``__d array<double>``:
+    the raw `_plane_dots` fold of ``vec`` against each plane, NULL for
+    a bad row (NULL vector or element — the chain's NULL dot). Callers
+    scale and round ``__d[j]`` in Spark SQL, so Spark's rounding stays
+    the one the oracle twins replicate."""
+
+    def emit(acc, bad):
+        import numpy as np
+        import pyarrow as pa
+
+        n, k = acc.shape
+        return [
+            pa.ListArray.from_arrays(
+                pa.array(np.arange(0, (n + 1) * k, k, dtype=np.int32)),
+                pa.array(acc.ravel()),
+                mask=pa.array(bad),
+            )
+        ]
+
+    return _plane_pass(emb_d, planes, {"__d": "array<double>"}, emit)
+
+
+def _scaled_projection(out_dim: int) -> Column:
+    """proj_j = round(__d[j] · (1/√out_dim), 9) over
+    `plane_dots_arrow`'s dots, as one parsed expression (one JVM-side
+    parse instead of a py4j round-trip per literal)."""
+    inv = 1.0 / math.sqrt(out_dim)
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"round(__d[{j}] * CAST({inv!r} AS DOUBLE), 9)" for j in range(out_dim)
+        )
+        + ")"
+    )
 
 
 def rademacher_planes(
@@ -254,23 +257,6 @@ def rademacher_planes(
     same LSH collision guarantees as Gaussian planes."""
     rng = random.Random(seed)
     return [[float(rng.choice((-1.0, 1.0))) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def near_dup_band_cols(vec_name: str, bands: int, bits_per_band: int) -> list[Column]:
-    """One integer column per LSH band: `bits_per_band` sign bits of
-    the deterministic Rademacher projections, packed little-endian.
-    Each band is a single parsed expression (see `_plane_dot_sql` for
-    why that matters)."""
-    planes = rademacher_planes(bands * bits_per_band)
-    band_cols = []
-    for j in range(bands):
-        terms = [
-            f"(CASE WHEN {_plane_dot_sql(vec_name, planes[j * bits_per_band + i])} "
-            f">= CAST(0.0 AS DOUBLE) THEN {1 << i} ELSE 0 END)"
-            for i in range(bits_per_band)
-        ]
-        band_cols.append(F.expr(" + ".join(terms)).alias(f"band_{j}"))
-    return band_cols
 
 
 def embedding_near_dup_pairs(
@@ -303,31 +289,27 @@ def embedding_near_dup_pairs(
     literal planes; a production deployment sets the knob from its
     corpus count.
     """
-    # Spread width capped by the input's split count (×4): the band
-    # projection below carries bands·bits·64 expression terms, and
-    # every TASK regenerates its ~1 MB of projection source before the
-    # executor's codegen cache can answer — at full local width a tiny
-    # input pays ~32 concurrent source-gens for a few dozen rows each
-    # (measured 3.6–4.5 s at width 32 vs ≤0.8 s at width ≤4 on the
-    # sf0.1 2 000-row table). A real corpus arrives in thousands of
-    # scan splits, so the cap never binds in production (guide §1.2:
-    # fix the per-task fixed cost before adding parallelism).
+    # Spread width capped by the input's split count (×4): every task
+    # of the band pass pays a fixed Python-worker and Arrow hand-off
+    # cost, so a tiny input at full local width is setup-dominated
+    # (measured at local[16] on a 4-core host, sf0.1's 2 000 rows:
+    # 3.20 s median uncapped at width 16 vs 2.14 s capped at width 8).
+    # A real corpus arrives in thousands of scan splits, so the cap
+    # never binds in production (guide §1.2: fix the per-task fixed
+    # cost before adding parallelism).
     emb_d = _spread(
         embeddings, "vec_id", cap=4 * embeddings.rdd.getNumPartitions()
     ).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
     # materialized: both pair-join sides consume the signature table,
-    # which would otherwise compute the projections twice. r13: the
-    # band columns come from the vectorized Arrow pass
-    # (`banded_signatures_arrow` — bit-identical to the former
-    # `near_dup_band_cols` expression chains, which remain the
-    # spec/reference implementation) instead of a bands×bits×64-term
-    # projection, so the janino-64KB codegen-off materialize detour is no
-    # longer needed and the plain materialize applies.
+    # which would otherwise run the band pass twice
     sig = _materialize(
         banded_signatures_arrow(
-            emb_d.select("vec_id", "label", "vec"), bands, bits_per_band
+            emb_d,
+            bands,
+            bits_per_band,
+            rademacher_planes(bands * bits_per_band),
         )
     )
     band_structs = [
@@ -376,8 +358,9 @@ def embedding_near_dup_pairs(
 def _label_centroids(emb_d: DataFrame, dim: int = 64) -> DataFrame:
     """#labels-row centroid table from a (label, vec: array<double>)
     relation: element-wise decimal-exact mean in ONE grouped pass —
-    64 decimal sums + count as single parsed expressions (the
-    `_plane_dot_sql` py4j rule), array assembly in the same
+    64 decimal sums + count as single parsed expressions (one
+    JVM-side parse each, not a py4j round-trip per literal), array
+    assembly in the same
     projection. Replaces the posexplode form, which multiplied the
     table ×64 before its (label, pos) shuffle and then paid a SECOND
     shuffle to reassemble arrays; the sums are the same numbers, so
@@ -570,27 +553,31 @@ def knn_lsh(
     expectation, and no cross product exists.
 
     Deterministic end to end, so oracle-backed: the Gaussian planes
-    are seeded Python floats embedded as literals in BOTH engines
-    (repr round-trips the exact double), the sign dots are sequential
-    folds (identical per-step IEEE rounding in Spark's aggregate and
-    DuckDB's list_dot_product — the `rademacher_planes` argument,
-    which never actually required ±1 coefficients), and scoring is the
-    round-9 cosine with unique tiebreaks.
+    are seeded Python floats (the oracle embeds them as literals —
+    repr round-trips the exact double), the bands come from
+    `banded_signatures_arrow`, whose sequential fold has the same
+    per-step IEEE rounding as DuckDB's list_dot_product (the
+    `rademacher_planes` argument, which never actually required ±1
+    coefficients), and scoring is the round-9 cosine with unique
+    tiebreaks. Band j is the packed sign bits of planes 4j … 4j+3 at
+    the default 12 planes × 3 bands.
     """
-    planes = _hyperplanes(n_planes, dim)
     bits_per_band = n_planes // bands
     emb_d = _materialize(
-        _spread(embeddings, "vec_id", cap=4 * embeddings.rdd.getNumPartitions())
-        .select("vec_id", "label", F.col("embedding").cast("array<double>").alias("vec"))
-        .withColumn("sig", lsh_signature("vec", planes))
-    )
-    mask = (1 << bits_per_band) - 1
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.shiftright(F.col("sig"), b * bits_per_band).bitwiseAND(F.lit(mask)).alias("band_sig"),
+        banded_signatures_arrow(
+            _spread(
+                embeddings, "vec_id", cap=4 * embeddings.rdd.getNumPartitions()
+            ).select(
+                "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
+            ),
+            bands,
+            bits_per_band,
+            _hyperplanes(n_planes, dim)[: bands * bits_per_band],
         )
-        for b in range(bands)
+    )
+    band_structs = [
+        F.struct(F.lit(j).alias("band_id"), F.col(f"band_{j}").alias("band_sig"))
+        for j in range(bands)
     ]
     # band rows carry ONLY ids (the minhash_lsh_pairs_portable rule): the
     # vector arrays would otherwise cross the band join `bands`× per
@@ -642,7 +629,7 @@ def embedding_quantize_int8(embeddings: DataFrame) -> DataFrame:
     row's own vector, not an aggregate. Determinism: elements cast to
     double first; q uses round() (half away from zero in both
     engines); error squares fold left-to-right and round(9) at the
-    edge — the `_plane_dot_sql` convention. Zero vectors quantize to
+    edge — the `_plane_dots` convention. Zero vectors quantize to
     all zeros with scale 0 (guarded, no division).
 
     Expressed as SCALAR chains over `embedding[i]` subscripts, not
@@ -715,33 +702,22 @@ def random_projection(embeddings: DataFrame, out_dim: int = 16) -> DataFrame:
     distances are preserved within the JL distortion bound
     (pytest-checked on pairs), at out_dim/64 the storage.
 
-    Map-side only: each output row is (vec_id, label, dim_id, value)
-    from a posexplode of one projection expression — no shuffle except
-    the presentation sort. round(9) per the float-path rule. The
-    projection ARRAY is MATERIALIZED before the explode: Generate
-    evaluates wide child expressions on Spark's interpreted path (the
-    16×64-term projection under posexplode measured 27.7 s vs 8.6 s
-    for the identical select), and the global orderBy's
-    range-partitioner would additionally SAMPLE-then-recompute an
-    unmaterialized child — together 57 s → 11 s at 100× with the
-    scalar-chain `_plane_dot_sql`. The explode and sort then run over
-    stored narrow rows."""
+    Map-side only: the dots come from the `plane_dots_arrow` pass,
+    the scaling and round(9) (the float-path rule) from one Spark
+    projection, and each output row is (vec_id, label, dim_id, value)
+    from a posexplode of that array — no shuffle except the
+    presentation sort. The projection ARRAY is MATERIALIZED before the
+    explode: the global orderBy's range-partitioner would otherwise
+    SAMPLE-then-recompute the Arrow pass. The explode and sort then
+    run over stored narrow rows."""
     if out_dim <= 0:
         raise ValueError("random_projection: out_dim must be positive")
-    planes = rademacher_planes(out_dim)
-    inv_sqrt = 1.0 / math.sqrt(out_dim)
-    proj = F.array(
-        *[
-            F.expr(
-                f"round(({_plane_dot_sql('embedding', p)})"
-                f" * CAST({inv_sqrt!r} AS DOUBLE), 9)"
-            )
-            for p in planes
-        ]
+    emb_d = embeddings.filter(F.col("embedding").isNotNull()).select(
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
     projected = _materialize(
-        embeddings.filter(F.col("embedding").isNotNull()).select(
-            "vec_id", "label", proj.alias("__p")
+        plane_dots_arrow(emb_d, rademacher_planes(out_dim)).select(
+            "vec_id", "label", _scaled_projection(out_dim).alias("__p")
         )
     )
     return (
@@ -784,27 +760,16 @@ def knn_projected(
     approximate search."""
     if shortlist < k:
         raise ValueError("knn_projected: shortlist must be >= k")
-    planes = rademacher_planes(out_dim)
-    inv = 1.0 / math.sqrt(out_dim)
-    proj = F.array(
-        *[
-            F.expr(
-                f"round(({_plane_dot_sql('embedding', p)})"
-                f" * CAST({inv!r} AS DOUBLE), 9)"
-            )
-            for p in planes
-        ]
+    emb_d = _spread(
+        embeddings.filter(F.col("embedding").isNotNull()),
+        "vec_id",
+        cap=4 * embeddings.rdd.getNumPartitions(),
+    ).select(
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
     base = _materialize(
-        _spread(
-            embeddings.filter(F.col("embedding").isNotNull()),
-            "vec_id",
-            cap=4 * embeddings.rdd.getNumPartitions(),
-        ).select(
-            "vec_id",
-            "label",
-            F.col("embedding").cast("array<double>").alias("vec"),
-            proj.alias("pvec"),
+        plane_dots_arrow(emb_d, rademacher_planes(out_dim)).select(
+            "vec_id", "label", "vec", _scaled_projection(out_dim).alias("pvec")
         )
     )
     pq = base.filter(F.col("vec_id") < n_queries).select(

@@ -83,10 +83,9 @@ def spread(df: DataFrame, *cols: str, cap: int | None = None) -> DataFrame:
     fan-out); partition width never changes results, only memory.
 
     ``cap``: optional ceiling on the width, for callers whose per-TASK
-    fixed cost is large (the sign-LSH signature projection generates
-    ~1 MB of projection source PER TASK before the codegen cache can
-    be consulted — measured 3.6–4.5 s for a 2 000-row input at width
-    32 vs 0.7 s at width ≤ 4, pure parallel-setup contention). Such
+    fixed cost is large (the sign-LSH band pass hands every task's
+    rows to a Python worker over Arrow — see
+    `similarity.embedding_near_dup_pairs` for the measurement). Such
     callers pass a cap derived from the INPUT's split count, so a
     small input stops fanning out into setup-dominated tasks while a
     real corpus (thousands of scan splits) keeps full width."""
@@ -122,6 +121,34 @@ def with_observation(df: DataFrame, name: str, *metrics):
 
     obs = Observation(name)
     return df.observe(obs, *metrics), obs
+
+
+def require_alphabet_cap(
+    df: DataFrame, key: str, value: str, cap: int, op: str
+) -> None:
+    """Raise ValueError unless every ``key`` group of ``df`` holds at
+    most ``cap`` distinct ``value``s — the loud operator-boundary
+    check before a grouped Arrow pass that buffers one group's whole
+    value alphabet in a single Python worker (an unquantized value
+    domain would otherwise die as an opaque executor OOM). One small
+    eager job; callers pass an already-materialized relation so it
+    reads stored blocks, not the source."""
+    from pyspark.sql import functions as F
+
+    worst = (
+        df.groupBy(key)
+        .agg(F.countDistinct(value).alias("v"))
+        .agg(F.max("v"))
+        .first()[0]
+    ) or 0
+    if worst > cap:
+        raise ValueError(
+            f"{op}: some {key} has a value alphabet of {worst} distinct "
+            f"{value} values, exceeding the per-{key} dense-grid cap of "
+            f"{cap}. The Arrow pass buffers one group's alphabet per task; "
+            "quantize the value axis (e.g. coarser bucketing) before "
+            "calling, or the group buffer will OOM."
+        )
 
 
 def disc_quantiles_from_counts(

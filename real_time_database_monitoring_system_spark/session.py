@@ -82,11 +82,17 @@ def get_local_spark(cpus: int | None = None) -> SparkSession:
     # local mode = one JVM for driver AND executors: the 1g default
     # heap starves 32 concurrent tasks (GC thrash, spills, and evicted
     # localCheckpoint blocks — measured 3× total bench regression).
-    # Size it like the per-executor memory a real cluster would get.
+    # Size it like the per-executor memory a real cluster would get,
+    # but never past half the host's physical memory: the heap grows
+    # toward -Xmx before collecting hard, so a 24g heap on a 15 GB host
+    # ends with the kernel OOM-killing the JVM (~12.6 GB RSS) mid-run.
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
     spark = get_spark(
         master=f"local[{n}]",
         shuffle_partitions=n,
-        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        driver_memory=os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", f"{min(24 << 10, host_mb // 2)}m"
+        ),
     )
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
     spark.conf.set("spark.sql.files.openCostInBytes", str(512 * 1024))

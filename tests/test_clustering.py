@@ -261,3 +261,62 @@ def test_clustering_tolerates_empty_input(spark, tmp_path):
     path = str(tmp_path / "empty_clustered")
     assert clustering.write_clustered(emb, path) == {}
     assert clustering.read_probed(spark, path, [0, 1]).count() == 0
+
+
+_RESTART_SCRIPT = """
+import sys
+
+repo, sf = sys.argv[1], sys.argv[2]
+sys.path.insert(0, repo)
+from pyspark import SparkContext
+
+from real_time_database_monitoring_system_spark.operators import clustering
+from real_time_database_monitoring_system_spark.session import get_local_spark
+from real_time_database_monitoring_system_spark.sources.registry import load_table
+
+
+def run():
+    spark = get_local_spark()
+    emb = load_table(spark, sf, "embeddings")
+    rows = (
+        sorted(map(tuple, clustering.kmeans_clusters(emb).collect())),
+        [tuple(r) for r in clustering.pca_power_iter(emb).collect()],
+    )
+    return spark, rows
+
+
+spark, first = run()
+spark.stop()
+# relaunch the JVM: Column handles from the first gateway point at
+# object ids the new JVM reuses for unrelated objects
+gateway = SparkContext._gateway
+gateway.shutdown()
+gateway.proc.stdin.close()
+gateway.proc.wait()
+SparkContext._gateway = None
+SparkContext._jvm = None
+spark, second = run()
+spark.stop()
+assert second == first and first[0] and first[1], "results changed"
+print("RESTART_OK")
+"""
+
+
+def test_kmeans_and_pca_survive_context_restart(sf_dir):
+    """The per-context expression caches rebuild after the SparkContext
+    stops and a new JVM gateway starts (a separate Python process, so
+    the suite's session is untouched)."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, str(Path(__file__).resolve().parents[1]), sf_dir],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env=env,
+    )
+    assert "RESTART_OK" in out.stdout, out.stderr[-3000:]

@@ -9,6 +9,9 @@ what they compute; these tests make the equivalences falsifiable:
   fixtures, pure Python (no Spark) so the sweep is wide.
 - `hl_from_value_counts` end-to-end on adversarial fixtures (the
   Spark path: rank targets, Arrow boundary, empty halves).
+- the one literal-plane kernel (`similarity._plane_dots`, through its
+  band and dot emitters) against the test-side chain spec
+  `tests/plane_chain_spec.py`, on the real corpus and corner cases.
 """
 
 from __future__ import annotations
@@ -21,7 +24,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from real_time_database_monitoring_system_spark.operators import analytics
+from real_time_database_monitoring_system_spark.operators import analytics, similarity
+from tests.plane_chain_spec import band_cols, dots_col, python_bands, python_dot
 
 
 def _brute_hl(pv):
@@ -340,46 +344,121 @@ def test_jt_from_cell_counts_bigint_cents_exact_beside_null(spark):
     assert got["n_total"] == 3
 
 
+def test_jt_from_cell_counts_alphabet_cap_fires(spark):
+    """One type with 100 001 distinct cents (the cap is 100 000) raises
+    ValueError when the operator is built, before the Arrow pass would
+    buffer its 24 × V grid in one worker."""
+    pc = spark.range(100_001).select(
+        F.lit("a").alias("event_type"),
+        (F.col("id") % 24).alias("h"),
+        F.col("id").alias("cents"),
+        F.lit(1).cast("bigint").alias("c"),
+    )
+    with pytest.raises(ValueError, match="alphabet of 100001 distinct cents"):
+        analytics.jt_from_cell_counts(pc)
+
+
 # ---------------------------------------------------------------------------
-# Sign-LSH bands: vectorized Arrow pass vs the expression-chain spec
+# Literal-plane projections: the one Arrow kernel vs the chain spec
 # ---------------------------------------------------------------------------
 
 
-def _band_parity(spark, df, bands, bits):
-    from real_time_database_monitoring_system_spark.operators import similarity
+def _rademacher(bands, bits):
+    return similarity.rademacher_planes(bands * bits)
 
-    arrow = similarity.banded_signatures_arrow(df, bands, bits)
+
+def _band_parity(df, bands, bits, planes):
+    arrow = similarity.banded_signatures_arrow(df, bands, bits, planes)
     chain = df.select(
-        "vec_id", "label", "vec",
-        *similarity.near_dup_band_cols("vec", bands, bits),
+        "vec_id", "label", "vec", *band_cols("vec", planes, bands, bits)
     )
     assert chain.exceptAll(arrow).count() == 0
     assert arrow.exceptAll(chain).count() == 0
 
 
-def test_arrow_bands_bit_identical_to_chain_real_corpus(spark, sf_dir):
-    """Every band of every row of the real embeddings table must match
-    the expression-chain spec exactly, at both the check-scale 6-bit
-    and the prod 16-bit band widths."""
+def _dots_parity(df, planes):
+    k = len(planes)
+    arrow = similarity.plane_dots_arrow(df, planes).select(
+        "vec_id", F.array(*[F.col("__d")[j] for j in range(k)]).alias("d")
+    )
+    chain = df.select("vec_id", dots_col("vec", planes).alias("d"))
+    assert chain.exceptAll(arrow).count() == 0
+    assert arrow.exceptAll(chain).count() == 0
+
+
+def _real_emb_d(spark, sf_dir):
     from real_time_database_monitoring_system_spark.sources.registry import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    emb_d = emb.select(
+    return load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
-    _band_parity(spark, emb_d, 8, 6)
-    _band_parity(spark, emb_d, 8, 16)
 
 
-def test_arrow_bands_corner_cases(spark):
-    """NULL vector / NULL element → all-zero bands (the chain's NULL
-    dot); NaN element → every bit set (Spark's NaN ≥ 0.0 is true);
-    longer-than-64 vectors use their first 64 elements — all checked
-    against the chain itself; a shorter-than-64 vector raises (the
-    chain's ANSI index would too)."""
+def test_arrow_bands_bit_identical_to_chain_real_corpus(spark, sf_dir):
+    """Every band of every row of the real embeddings table matches the
+    chain spec at the check-scale 8×6 width, and a sequential Python
+    fold over the same rows at the prod 8×16 width (a 128×64-term
+    chain is too large a plan to hold the Spark spec to)."""
+    emb_d = _real_emb_d(spark, sf_dir)
+    _band_parity(emb_d, 8, 6, _rademacher(8, 6))
+
+    planes = _rademacher(8, 16)
+    got = {
+        r["vec_id"]: tuple(r[f"band_{j}"] for j in range(8))
+        for r in similarity.banded_signatures_arrow(emb_d, 8, 16, planes).collect()
+    }
+    rows = emb_d.select("vec_id", "vec").collect()
+    assert len(got) == len(rows) > 0
+    for r in rows:
+        assert got[r["vec_id"]] == python_bands(r["vec"], planes, 8, 16), r["vec_id"]
+
+
+def test_arrow_bands_gaussian_knn_lsh_planes_real_corpus(spark, sf_dir):
+    """`knn_lsh`'s bands: 12 seeded Gaussian planes, 3 bands × 4 bits,
+    against the general multiply chain."""
+    _band_parity(_real_emb_d(spark, sf_dir), 3, 4, similarity._hyperplanes(12, 64))
+
+
+def test_arrow_dots_bit_identical_to_chain_real_corpus(spark, sf_dir):
+    """The 16 Rademacher dots behind `random_projection`/`knn_projected`
+    equal the chain's doubles exactly, and so do `knn_lsh`'s Gaussian
+    dots: with ±1 planes every fold order is exact on float32 data, so
+    only the Gaussian check pins the kernel's order and its separate
+    (unfused) multiply and add."""
+    emb_d = _real_emb_d(spark, sf_dir)
+    _dots_parity(emb_d, _rademacher(1, 16))
+    _dots_parity(emb_d, similarity._hyperplanes(12, 64))
+
+
+def test_plane_dots_kernel_matches_python_fold(sf_dir):
+    """`_plane_dots` itself, on every real vector in one batch, equals
+    the sequential Python fold exactly for Gaussian and ±1 planes (a
+    BLAS matmul or a reordered fold differs in the last bits)."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    col = (
+        pq.read_table(os.path.join(sf_dir, "embeddings.parquet"), columns=["embedding"])
+        .column("embedding")
+        .combine_chunks()
+        .cast(pa.list_(pa.float64()))
+    )
+    vecs = col.to_pylist()
+    for planes in (similarity._hyperplanes(12, 64), _rademacher(1, 16)):
+        acc, bad = similarity._plane_dots(col, np.array(planes))
+        for r, v in enumerate(vecs):
+            if v is None or None in v:
+                assert bad[r]
+                continue
+            assert not bad[r]
+            assert acc[r].tolist() == [python_dot(v, p) for p in planes], r
+
+
+def _corner_case_df(spark):
     import random as _random
-
-    from real_time_database_monitoring_system_spark.operators import similarity
 
     rng = _random.Random(7)
     rows = [(i, 1, [rng.uniform(-2, 2) for _ in range(64)]) for i in range(50)]
@@ -391,11 +470,40 @@ def test_arrow_bands_corner_cases(spark):
     v[7] = float("nan")
     rows.append((1002, 1, v))
     rows.append((1003, 1, [0.25] * 70))
-    df = spark.createDataFrame(rows, "vec_id bigint, label int, vec array<double>")
-    _band_parity(spark, df, 4, 6)
+    return spark.createDataFrame(rows, "vec_id bigint, label int, vec array<double>")
+
+
+def test_arrow_bands_corner_cases(spark):
+    """NULL vector / NULL element → all-zero bands (the chain's NULL
+    dot); NaN element → every bit set (Spark's NaN ≥ 0.0 is true);
+    longer-than-64 vectors use their first 64 elements — all checked
+    against the chain itself; a shorter-than-64 vector raises (the
+    chain's ANSI index would too)."""
+    _band_parity(_corner_case_df(spark), 8, 6, _rademacher(8, 6))
 
     short = spark.createDataFrame(
         [(1, 1, [0.5] * 10)], "vec_id bigint, label int, vec array<double>"
     )
     with pytest.raises(Exception, match="shorter"):
-        similarity.banded_signatures_arrow(short, 2, 3).collect()
+        similarity.banded_signatures_arrow(short, 2, 3, _rademacher(2, 3)).collect()
+
+
+def test_arrow_dots_corner_cases(spark):
+    """The dots emitter on the same fixtures: a NULL vector or element
+    gives NULL dots (an all-NULL array, as the chain's NULL elements),
+    NaN propagates, a 70-dim vector uses its first 64 elements, and a
+    short vector raises."""
+    df = _corner_case_df(spark)
+    _dots_parity(df, _rademacher(1, 16))
+    got = {
+        r["vec_id"]: r["__d"]
+        for r in similarity.plane_dots_arrow(df, _rademacher(1, 4)).collect()
+    }
+    assert got[1000] is None and got[1001] is None
+    assert all(math.isnan(x) for x in got[1002])
+
+    short = spark.createDataFrame(
+        [(1, 1, [0.5] * 10)], "vec_id bigint, label int, vec array<double>"
+    )
+    with pytest.raises(Exception, match="shorter"):
+        similarity.plane_dots_arrow(short, _rademacher(1, 4)).collect()

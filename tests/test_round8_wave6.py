@@ -365,38 +365,6 @@ def test_wave6_plan_budgets(spark, sf_dir):
         assert n <= ceiling, f"{name}: {n} exchanges > budget {ceiling}"
 
 
-# ---------------------------------------------------------------------------
-# ±1 plane-dot fast path (similarity._plane_dot_sql)
-# ---------------------------------------------------------------------------
-
-
-def test_pm_chain_bit_identical(spark, sf_dir):
-    """The Rademacher signed-add chain must be BIT-identical to the
-    general multiply chain (IEEE: x·±1.0 is exact, acc + (−x) ≡
-    acc − x) — the invariant that lets the fast path keep the DuckDB
-    oracles untouched."""
-    from real_time_database_monitoring_system_spark.operators import similarity as S
-    from real_time_database_monitoring_system_spark.sources.registry import (
-        load_table,
-    )
-
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("vec"))
-    )
-    plane = S.rademacher_planes(1)[0]
-    assert all(c in (1.0, -1.0) for c in plane)
-    fast = S._plane_dot_sql("vec", plane)
-    assert "*" not in fast  # the fast path actually engaged
-    slow_terms = " + ".join(
-        f"CAST(vec[{i}] AS DOUBLE) * CAST({c!r} AS DOUBLE)"
-        for i, c in enumerate(plane)
-    )
-    slow = f"(CAST(0.0 AS DOUBLE) + {slow_terms})"
-    diff = emb.filter(F.expr(f"{fast} <> {slow}")).count()
-    assert diff == 0
-
-
 def test_bpe_atom_decomposition_identical(spark, sf_dir):
     """token_stats' three positive-class scans must count exactly what
     the literal BPE alternation counts — the arms partition the atom
