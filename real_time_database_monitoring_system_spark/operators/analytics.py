@@ -26,8 +26,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .util import materialize as _materialize
+from .util import FEED_US
 from .util import disc_quantiles_from_counts as _disc_quantiles
+from .util import half_counts as _half_counts
 from .util import require_alphabet_cap as _require_alphabet_cap
+from .util import tag_halves as _tag_halves
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -1177,8 +1180,6 @@ def value_concentration(events: DataFrame) -> DataFrame:
 
 # -- round-6 association + two-sample testing panel ------------------
 
-_US_A = "unix_micros(cast(ts as timestamp))"
-
 # χ² via the algebraic identity χ² = Σ N·obs²/(r·c) − N over OBSERVED
 # cells only (empty cells contribute obs² = 0 and the identity already
 # accounts for their expected mass) — per-cell term pinned-order,
@@ -1406,26 +1407,18 @@ def welch_ttest(events: DataFrame) -> DataFrame:
     keeps running double state and is neither). Mean/variance are
     single pinned round(9) expressions over those sums; t and the
     Welch–Satterthwaite df compose the already-rounded columns. NULL
-    values drop (a mean test has no NULL semantics); the midpoint is
-    derived from the WHOLE feed first, the `psi_drift` convention.
+    values drop (a mean test has no NULL semantics) after the
+    `util.tag_halves` split.
 
     Scale shape: one min/max aggregate (broadcast back), then ONE
     keyed aggregation over the feed with map-side partials into
     #types×2 groups. Output #types rows."""
-    # Lazy single-consumer scalar: the min/max aggregate runs as the
-    # broadcast-build subtree of the SAME job that scans the feed for
-    # the keyed aggregation (one feed scan per subtree either way);
-    # materializing it eagerly only added a sequential driver-blocking
-    # job per call (guide §1.2/§2.4 — r12 job-count sweep).
-    stats = events.agg(
-        F.expr(f"min({_US_A})").alias("mn"), F.expr(f"max({_US_A})").alias("mx")
-    )
     sides = (
-        events.filter(F.col("value").isNotNull())
-        .crossJoin(F.broadcast(stats))
+        _tag_halves(events)
+        .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            (F.expr(_US_A) <= F.expr("(mn + mx) div 2")).alias("is_ref"),
+            "is_ref",
             F.col("value").cast("decimal(18,2)").alias("x"),
         )
         .groupBy("event_type", "is_ref")
@@ -1515,40 +1508,18 @@ def mannwhitney_u(events: DataFrame) -> DataFrame:
     tie term Σ(t³−t). The accumulation is decimal-exact INTERNALLY;
     the hashed edge emits u_stat as DOUBLE (exact: /2) and the
     integral verdict components as BIGINT — never DecimalType, the
-    round-7 driver-hash failure class. NULLs drop
-    (rank tests have no NULL order); midpoint from the whole feed,
-    the `psi_drift` convention. tie_term keeps n_ref·n_cur OUT of
-    the product (it would push the magnitude to n⁵ and overflow
-    DECIMAL(38,0) around n ≈ 10⁷); as emitted it is O(n³), exact to
-    n ≈ 2·10¹².
+    round-7 driver-hash failure class. NULLs drop (rank tests have no
+    NULL order) after the `util.tag_halves` split. tie_term keeps
+    n_ref·n_cur OUT of the product (it would push the magnitude to n⁵
+    and overflow DECIMAL(38,0) around n ≈ 10⁷); as emitted it is O(n³),
+    exact to n ≈ 2·10¹².
 
     Scale shape: one keyed count to (type, value, side) — the state is
     bounded by distinct values per type, the `ks_drift` trade — then a
     per-type window over that REDUCED relation (never the feed) and a
     #types-row final join."""
-    # Lazy single-consumer scalar: the min/max aggregate runs as the
-    # broadcast-build subtree of the SAME job that scans the feed for
-    # the keyed aggregation (one feed scan per subtree either way);
-    # materializing it eagerly only added a sequential driver-blocking
-    # job per call (guide §1.2/§2.4 — r12 job-count sweep).
-    stats = events.agg(
-        F.expr(f"min({_US_A})").alias("mn"), F.expr(f"max({_US_A})").alias("mx")
-    )
-    per_value = (
-        events.filter(F.col("value").isNotNull())
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "event_type",
-            "value",
-            (F.expr(_US_A) <= F.expr("(mn + mx) div 2")).alias("is_ref"),
-        )
-        .groupBy("event_type", "value")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("c_ref"),
-            F.sum(F.when(~F.col("is_ref"), 1).otherwise(0)).alias("c_cur"),
-        )
-    )
-    return mwu_from_value_counts(per_value)
+    per_value = _half_counts(events, ["event_type"], "value", "c")
+    return mwu_from_value_counts(per_value.filter(F.col("value").isNotNull()))
 
 
 def mwu_from_value_counts(
@@ -1670,10 +1641,10 @@ def hodges_lehmann(events: DataFrame) -> DataFrame:
     exact: Σ_vc c_cur(vc)·(ref mass ≥ vc−d) — pure BIGINT products of
     half counts (exact to N ≈ 6·10⁹ per type, ANSI-loud beyond).
     Order statistics are minimal integer thresholds reaching exact
-    integer ranks — no sampling, no sketch. The midpoint split is the
-    whole-feed integer-µs convention (`psi_drift`). The lone double is
-    the Moses rank floor (shared SQL) and the lo/hi midpoint emission
-    (exact: /2 of an integer sum).
+    integer ranks — no sampling, no sketch. The split is
+    `util.tag_halves`. The lone double is the Moses rank floor (shared
+    SQL) and the lo/hi midpoint emission (exact: /2 of an integer
+    sum).
 
     Scale shape: the feed reduces ONCE to the per-(type, cents, side)
     half-count relation (map-side partials, bounded by the value
@@ -1684,29 +1655,9 @@ def hodges_lehmann(events: DataFrame) -> DataFrame:
     |V_ref|·|V_cur| grid join, whose V² constant was feed-independent
     and survived at 100 TB. A type with an empty half emits no row
     (no pairs to take a median of)."""
-    # Lazy single-consumer scalar: the min/max aggregate runs as the
-    # broadcast-build subtree of the SAME job that scans the feed for
-    # the keyed aggregation (one feed scan per subtree either way);
-    # materializing it eagerly only added a sequential driver-blocking
-    # job per call (guide §1.2/§2.4 — r12 job-count sweep).
-    stats = events.agg(
-        F.expr(f"min({_US_A})").alias("mn"), F.expr(f"max({_US_A})").alias("mx")
-    )
-    per_value = (
-        events.filter(F.col("value").isNotNull())
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "event_type",
-            F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-            (F.expr(_US_A) <= F.expr("(mn + mx) div 2")).alias("is_ref"),
-        )
-        .groupBy("event_type", "cents")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("c_ref"),
-            F.sum(F.when(~F.col("is_ref"), 1).otherwise(0)).alias("c_cur"),
-        )
-    )
-    return hl_from_value_counts(per_value)
+    cents = events.withColumn("cents", F.expr("CAST(round(value * 100) AS BIGINT)"))
+    per_value = _half_counts(cents, ["event_type"], "cents", "c")
+    return hl_from_value_counts(per_value.filter(F.col("cents").isNotNull()))
 
 
 # Cap on the PER-TYPE value alphabet feeding the Hodges–Lehmann grid
@@ -1972,43 +1923,6 @@ def apdex_from_class_counts(counts: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def half_cents_counts(events: DataFrame) -> DataFrame:
-    """The shared reduction of the two-sample drift family: per-type
-    per-distinct-value half counts (event_type, cents, c_ref, c_cur),
-    splitting the feed at the whole-feed time midpoint (the
-    `psi_drift` convention) and quantizing `value` to integer cents —
-    exact for the 2-decimal feed (the `apdex_score` rule) and the key
-    that makes the value axis integer so downstream gap arithmetic
-    (Wasserstein) never touches a float.
-
-    Scale shape: one map-side-combinable keyed count; the output is
-    bounded by distinct values per type, never the feed — the same
-    state bound `ks_drift` and `mannwhitney_u` accept, and the exact
-    relation a streaming twin maintains forever."""
-    # Lazy single-consumer scalar: the min/max aggregate runs as the
-    # broadcast-build subtree of the SAME job that scans the feed for
-    # the keyed aggregation (one feed scan per subtree either way);
-    # materializing it eagerly only added a sequential driver-blocking
-    # job per call (guide §1.2/§2.4 — r12 job-count sweep).
-    stats = events.agg(
-        F.expr(f"min({_US_A})").alias("mn"), F.expr(f"max({_US_A})").alias("mx")
-    )
-    return (
-        events.filter(F.col("value").isNotNull())
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "event_type",
-            F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-            (F.expr(_US_A) <= F.expr("(mn + mx) div 2")).alias("is_ref"),
-        )
-        .groupBy("event_type", "cents")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("c_ref"),
-            F.sum(F.when(~F.col("is_ref"), 1).otherwise(0)).alias("c_cur"),
-        )
-    )
-
-
 def wasserstein_drift(events: DataFrame) -> DataFrame:
     """Per-type 1-Wasserstein (earth-mover) distance between the
     feed's two time halves — the drift metric that reports the SIZE of
@@ -2025,10 +1939,13 @@ def wasserstein_drift(events: DataFrame) -> DataFrame:
     one fixed-shape double division (never DecimalType — the round-7
     failure class).
 
-    Scale shape: rides `half_cents_counts` (bounded per-type distinct
-    value state), then one per-type window over that REDUCED relation
-    and a #types-row final aggregate. No joins, nothing quadratic."""
-    return wasserstein_from_value_counts(half_cents_counts(events))
+    Scale shape: rides `util.half_counts` on integer cents (bounded
+    per-type distinct value state), then one per-type window over
+    that REDUCED relation and a #types-row final aggregate. No joins,
+    nothing quadratic."""
+    cents = events.withColumn("cents", F.expr("CAST(round(value * 100) AS BIGINT)"))
+    per_value = _half_counts(cents, ["event_type"], "cents", "c")
+    return wasserstein_from_value_counts(per_value.filter(F.col("cents").isNotNull()))
 
 
 def wasserstein_from_value_counts(
@@ -2109,7 +2026,9 @@ def cliffs_delta(events: DataFrame) -> DataFrame:
     Scale shape: identical to `mannwhitney_u` — keyed count to the
     bounded distinct-value relation, one window over that relation,
     #types-row final aggregate."""
-    return cliffs_from_value_counts(half_cents_counts(events))
+    cents = events.withColumn("cents", F.expr("CAST(round(value * 100) AS BIGINT)"))
+    per_value = _half_counts(cents, ["event_type"], "cents", "c")
+    return cliffs_from_value_counts(per_value.filter(F.col("cents").isNotNull()))
 
 
 def cliffs_from_value_counts(
@@ -2596,7 +2515,7 @@ def windowed_wasserstein(events: DataFrame) -> DataFrame:
         events.filter(F.col("value").isNotNull())
         .groupBy(
             "event_type",
-            F.expr(f"{_US_A} div 86400000000").alias("day"),
+            F.expr(f"{FEED_US} div 86400000000").alias("day"),
             F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
         )
         .agg(F.count("*").alias("c"))
@@ -3150,7 +3069,7 @@ def quantile_drift(events: DataFrame) -> DataFrame:
         events.filter(F.col("value").isNotNull())
         .groupBy(
             "event_type",
-            F.expr(f"{_US_A} div 86400000000").alias("day"),
+            F.expr(f"{FEED_US} div 86400000000").alias("day"),
             F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
         )
         .agg(F.count("*").alias("c"))
@@ -3423,7 +3342,7 @@ def dow_activity_gof(events: DataFrame) -> DataFrame:
     (type, day) daily-count relation (≤ types × days rows — the
     `mann_kendall_trend` state bound, and exactly what the streaming
     twin maintains) — nothing else touches the feed."""
-    day = F.expr(f"{_US_A} div 86400000000")
+    day = F.expr(f"{FEED_US} div 86400000000")
     daily = events.groupBy("event_type", day.alias("day")).agg(
         F.count("*").alias("n")
     )
@@ -3500,7 +3419,7 @@ def jonckheere_terpstra(events: DataFrame) -> DataFrame:
         events.filter(F.col("value").isNotNull())
         .groupBy(
             "event_type",
-            F.expr(f"({_US_A} div 3600000000) % 24").alias("h"),
+            F.expr(f"({FEED_US} div 3600000000) % 24").alias("h"),
             F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
         )
         .agg(F.count("*").alias("c"))

@@ -23,7 +23,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .util import materialize as _materialize
+from .util import FEED_US
 from .util import disc_quantiles_from_counts as _disc_quantiles
+from .util import half_counts as _half_counts
 
 # 1 / Φ^{-1}(3/4): scales MAD to estimate σ under normality
 _MAD_SIGMA = 1.4826
@@ -315,8 +317,6 @@ PSI_TERM_SQL = (
     " / (CAST(c_cur + 1 AS DOUBLE) / CAST(t_cur + {nbins} AS DOUBLE))), 9)"
 )
 
-_US = "unix_micros(cast(ts as timestamp))"
-
 
 def psi_drift(events: DataFrame, nbins: int = 10) -> DataFrame:
     """Population Stability Index between the feed's first and second
@@ -348,26 +348,7 @@ def psi_drift(events: DataFrame, nbins: int = 10) -> DataFrame:
     streaming twin shares this coda verbatim."""
     if nbins < 2:
         raise ValueError("psi_drift: nbins must be ≥ 2")
-    # Lazy single-consumer scalar: the min/max aggregate runs as the
-    # broadcast-build subtree of the SAME job that scans the feed for
-    # the keyed aggregation (one feed scan per subtree either way, and
-    # identical broadcast subtrees are exchange-reused); materializing
-    # it eagerly only added a sequential driver-blocking job per call
-    # (guide §1.2/§2.4 — r12 job-count sweep).
-    stats = events.agg(
-        F.expr(f"min({_US})").alias("mn"), F.expr(f"max({_US})").alias("mx")
-    )
-    per_value = (
-        events.crossJoin(F.broadcast(stats))
-        .select(
-            (F.expr(_US) <= F.expr("(mn + mx) div 2")).alias("is_ref"), "value"
-        )
-        .groupBy("value")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("d_ref"),
-            F.sum(F.when(~F.col("is_ref"), 1).otherwise(0)).alias("d_cur"),
-        )
-    )
+    per_value = _half_counts(events, [], "value", "d")
     return psi_from_value_counts(per_value, nbins)
 
 def dispersion_panel(events: DataFrame, bucket_seconds: int = 60) -> DataFrame:
@@ -391,7 +372,7 @@ def dispersion_panel(events: DataFrame, bucket_seconds: int = 60) -> DataFrame:
     interpretation."""
     bucket_us = bucket_seconds * 1_000_000
     counts = events.groupBy(
-        "event_type", F.expr(f"{_US} div {bucket_us}").alias("b")
+        "event_type", F.expr(f"{FEED_US} div {bucket_us}").alias("b")
     ).agg(F.count("*").alias("c"))
     return (
         counts.groupBy("event_type")
@@ -468,41 +449,9 @@ def ks_drift(events: DataFrame) -> DataFrame:
     # diamond rule: the per-value count relation feeds both the half
     # totals and the ECDF window — materialize or the feed is scanned
     # (and the split-tagging recomputed) twice
-    return ks_from_value_counts(_materialize(half_value_counts(events)))
-
-
-def half_value_counts(events: DataFrame) -> DataFrame:
-    """The (event_type, value, d_ref, d_cur) temporal-half count
-    relation shared by the two-sample drift panel (`ks_drift`,
-    `anderson_darling`, `cramer_von_mises`, `kuiper_drift`): tag each
-    non-NULL value by which side of the feed's integer-µs midpoint it
-    falls (the `psi_drift` convention — the midpoint derives from the
-    WHOLE feed, before NULLs drop), then reduce to one row per
-    (type, distinct value) with both halves' counts in ONE keyed
-    aggregate. Callers materialize it (every coda reads the relation
-    at least twice — the diamond rule)."""
-    # Lazy single-consumer scalar: the min/max aggregate runs as the
-    # broadcast-build subtree of the SAME job that scans the feed for
-    # the keyed aggregation (one feed scan per subtree either way, and
-    # identical broadcast subtrees are exchange-reused); materializing
-    # it eagerly only added a sequential driver-blocking job per call
-    # (guide §1.2/§2.4 — r12 job-count sweep).
-    stats = events.agg(
-        F.expr(f"min({_US})").alias("mn"), F.expr(f"max({_US})").alias("mx")
-    )
-    return (
-        events.filter(F.col("value").isNotNull())
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "event_type",
-            "value",
-            (F.expr(_US) <= F.expr("(mn + mx) div 2")).alias("is_ref"),
-        )
-        .groupBy("event_type", "value")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("d_ref"),
-            F.sum(F.when(~F.col("is_ref"), 1).otherwise(0)).alias("d_cur"),
-        )
+    counts = _half_counts(events, ["event_type"], "value", "d")
+    return ks_from_value_counts(
+        _materialize(counts.filter(F.col("value").isNotNull()))
     )
 
 
@@ -610,9 +559,12 @@ def anderson_darling(events: DataFrame) -> DataFrame:
     type; past that the ANSI sum raises loudly (the family contract).
 
     Scale shape: identical to `ks_drift` — the feed reduces once to
-    the shared `half_value_counts` relation; the ECDF runs per type
+    the shared `util.half_counts` relation; the ECDF runs per type
     over that reduced relation; totals broadcast."""
-    return ad_from_value_counts(_materialize(half_value_counts(events)))
+    counts = _half_counts(events, ["event_type"], "value", "d")
+    return ad_from_value_counts(
+        _materialize(counts.filter(F.col("value").isNotNull()))
+    )
 
 
 def ad_from_value_counts(
@@ -701,9 +653,12 @@ def cramer_von_mises(events: DataFrame) -> DataFrame:
     at the edge (`CVM_STAT_SQL`, shared with the oracle) — the
     `ks_from_value_counts` rule exactly.
 
-    Scale shape: identical to `ks_drift` — shared `half_value_counts`
+    Scale shape: identical to `ks_drift` — shared `util.half_counts`
     reduction, per-type window over the reduced relation only."""
-    return cvm_from_value_counts(_materialize(half_value_counts(events)))
+    counts = _half_counts(events, ["event_type"], "value", "d")
+    return cvm_from_value_counts(
+        _materialize(counts.filter(F.col("value").isNotNull()))
+    )
 
 
 def cvm_from_value_counts(
@@ -783,9 +738,12 @@ def kuiper_drift(events: DataFrame) -> DataFrame:
     integral D⁺/D⁻ numerators emit as BIGINT (≤ n_ref·n_cur — exact
     to N ≈ 6·10⁹ per type, ANSI-loud beyond).
 
-    Scale shape: identical to `ks_drift` — shared `half_value_counts`
+    Scale shape: identical to `ks_drift` — shared `util.half_counts`
     reduction, per-type window over the reduced relation only."""
-    return kuiper_from_value_counts(_materialize(half_value_counts(events)))
+    counts = _half_counts(events, ["event_type"], "value", "d")
+    return kuiper_from_value_counts(
+        _materialize(counts.filter(F.col("value").isNotNull()))
+    )
 
 
 def kuiper_from_value_counts(
@@ -870,7 +828,7 @@ def acf_panel(events: DataFrame, max_lag: int = 7) -> DataFrame:
     aggregate is #types × max_lag rows."""
     if max_lag < 1:
         raise ValueError("acf_panel: max_lag must be ≥ 1")
-    day = F.expr(f"{_US} div 86400000000")
+    day = F.expr(f"{FEED_US} div 86400000000")
     # diamond rule: the (type, day) count relation feeds the span
     # aggregate AND the densify join — materialize so the feed reduces
     # exactly once; likewise the dense series feeds the moment
@@ -980,7 +938,7 @@ def changepoint_detect(events: DataFrame) -> DataFrame:
     consume it); candidates are the ≤ span-days rows per type; the
     argmax is a WindowGroupLimit-prunable rank. Types with a single
     day have no split and drop out."""
-    day = F.expr(f"{_US} div 86400000000")
+    day = F.expr(f"{FEED_US} div 86400000000")
     counts = _materialize(
         events.groupBy("event_type", day.alias("day")).agg(
             F.count("*").alias("y")
@@ -1083,7 +1041,7 @@ def theil_sen_trend(events: DataFrame) -> DataFrame:
     the type key — O(span²) per type, bounded by the calendar (a
     decade is ~13M pairs/type), never by feed volume. The final
     aggregate is #types rows."""
-    day = F.expr(f"{_US} div 86400000000")
+    day = F.expr(f"{FEED_US} div 86400000000")
     counts = _materialize(
         events.groupBy("event_type", day.alias("day")).agg(
             F.count("*").alias("y")
@@ -1159,7 +1117,7 @@ def xcorr_panel(events: DataFrame, max_lag: int = 7) -> DataFrame:
         raise ValueError("xcorr_panel: max_lag must be ≥ 0")
     from .analytics import CORR_FINAL_SQL
 
-    day = F.expr(f"{_US} div 86400000000")
+    day = F.expr(f"{FEED_US} div 86400000000")
     counts = _materialize(
         events.groupBy("event_type", day.alias("day")).agg(
             F.count("*").alias("y")
@@ -1330,7 +1288,7 @@ def windowed_psi(
         raise ValueError("windowed_psi: nbins must be ≥ 2")
     counts = events.filter(F.col("value").isNotNull()).groupBy(
         "event_type",
-        F.expr(f"{_US} div 86400000000").alias("day"),
+        F.expr(f"{FEED_US} div 86400000000").alias("day"),
         F.expr(psi_fixed_bin_sql(nbins, bin_cents)).alias("bin"),
     ).agg(F.count("*").alias("c"))
     return windowed_psi_from_counts(counts, nbins)
@@ -1852,9 +1810,12 @@ def ansari_bradley(events: DataFrame) -> DataFrame:
     null moments E[AB] and var(AB) from n_ref/n_cur in closed form.
 
     Scale shape: identical to `ks_drift` — the shared
-    `half_value_counts` reduction, one per-type window over the
+    `util.half_counts` reduction, one per-type window over the
     reduced relation, totals broadcast."""
-    return ab_from_value_counts(_materialize(half_value_counts(events)))
+    counts = _half_counts(events, ["event_type"], "value", "d")
+    return ab_from_value_counts(
+        _materialize(counts.filter(F.col("value").isNotNull()))
+    )
 
 
 def ab_from_value_counts(
@@ -1943,9 +1904,12 @@ def mood_scale_test(events: DataFrame) -> DataFrame:
     the cvm_num edge precedent, exact below 2⁵³.
 
     Scale shape: identical to `ks_drift` — the shared
-    `half_value_counts` reduction, one per-type window over the
+    `util.half_counts` reduction, one per-type window over the
     reduced relation, totals broadcast."""
-    return mood_scale_from_value_counts(_materialize(half_value_counts(events)))
+    counts = _half_counts(events, ["event_type"], "value", "d")
+    return mood_scale_from_value_counts(
+        _materialize(counts.filter(F.col("value").isNotNull()))
+    )
 
 
 def mood_scale_from_value_counts(
@@ -2086,7 +2050,7 @@ def lepage_test(events: DataFrame) -> DataFrame:
     the omnibus companion the two marginal tests bracket.
 
     Exactness: both component statistics and all null moments derive
-    from the shared `half_value_counts` relation in exact integer
+    from the shared `util.half_counts` relation in exact integer
     arithmetic — the Wilcoxon side reuses `mwu_from_value_counts`'
     z_num/tie_term components verbatim; the AB side reuses the
     `AB_F2_SQL`/`AB_TERM_SQL` rank-span machinery, with the tie-aware
@@ -2099,7 +2063,10 @@ def lepage_test(events: DataFrame) -> DataFrame:
     per-distinct-value half counts, per-type windows over the reduced
     relation, totals broadcast. Types living entirely in one half drop
     (no two-sample statistic exists), the `mannwhitney_u` convention."""
-    return lepage_from_value_counts(_materialize(half_value_counts(events)))
+    counts = _half_counts(events, ["event_type"], "value", "d")
+    return lepage_from_value_counts(
+        _materialize(counts.filter(F.col("value").isNotNull()))
+    )
 
 
 def lepage_from_value_counts(
@@ -2324,7 +2291,7 @@ def _dense_daily_counts(events: DataFrame) -> DataFrame:
     the trend tests: calendar-dense per type (silent days are real
     zeros — `theil_sen_trend`'s convention), materialized because
     every consumer reads it at least twice (the diamond rule)."""
-    day = F.expr(f"{_US} div 86400000000")
+    day = F.expr(f"{FEED_US} div 86400000000")
     counts = _materialize(
         events.groupBy("event_type", day.alias("day")).agg(
             F.count("*").alias("y")

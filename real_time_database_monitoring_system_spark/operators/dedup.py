@@ -525,22 +525,23 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     exact decimal sum of labels is unchanged" — the sum is observed on
     the materialized result for free. A pathological chain longer than
     2^max_iter hops would exit unconverged, so non-convergence raises
-    instead of silently splitting a cluster. `localCheckpoint`
+    instead of silently splitting a cluster. `util.materialize`
     truncates lineage each iteration (the standard Spark idiom for
     iterative algorithms)."""
     from pyspark.sql import Observation
 
     edges = pairs.select("doc_a", "doc_b")
-    und = edges.unionByName(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=True)
+    und = _materialize(
+        edges.unionByName(
+            edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+        )
+    )
     obs0 = Observation()
-    labels = (
+    labels = _materialize(
         und.select(F.col("doc_a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
         .observe(obs0, F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
-        .localCheckpoint(eager=True)
     )
     prev_sum = obs0.get["s"]
     for _ in range(max_iter):
@@ -556,7 +557,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         # Every label value is a node id (min over ids seen), so the
         # inner join is total; m(x) ≤ x keeps labels monotone.
         obs = Observation()
-        new_labels = (
+        new_labels = _materialize(
             one.join(
                 labels.select(
                     F.col("node").alias("label"), F.col("label").alias("jump")
@@ -565,7 +566,6 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             )
             .select("node", F.col("jump").alias("label"))
             .observe(obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
-            .localCheckpoint(eager=True)
         )
         new_sum = obs.get["s"]
         labels = new_labels

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from .util import materialize
+
 
 def upsert(target: DataFrame, updates: DataFrame, key_cols: list[str]) -> DataFrame:
     """M1 upsert, last-writer-wins on `key_cols`: rows from `updates`
@@ -166,7 +168,5 @@ def multi_table_transaction(
     for table in writes:
         stage = f"{table}{staging_suffix}"
         # lineage-free read of the materialized staging data
-        spark.table(stage).localCheckpoint(eager=True).write.mode(
-            "overwrite"
-        ).saveAsTable(table)
+        materialize(spark.table(stage)).write.mode("overwrite").saveAsTable(table)
         _drop_stage(stage)

@@ -447,3 +447,81 @@ def daily_cents_sums(events: DataFrame, by_cohort: bool = False) -> DataFrame:
             F.count("*").alias("c"),
         )
     )
+
+
+# Epoch µs of a feed row: the time axis of the two-sample split.
+FEED_US = "unix_micros(cast(ts as timestamp))"
+
+
+def tag_halves(df: DataFrame, us: str = FEED_US) -> DataFrame:
+    """The two-sample drift family's ONE temporal split: ``df`` plus a
+    boolean ``is_ref``, true for rows at or before the integer-µs
+    midpoint ``(min(us) + max(us)) div 2`` of the whole relation.
+    Every batch member and its streaming twin splits here, so the
+    reference/current halves cannot drift between copies.
+
+    - Midpoint: integer ``div`` truncates toward zero, as the oracle's
+      DuckDB ``//`` does, so pre-1970 feeds agree too. A row exactly on
+      the midpoint is reference; a single-timestamp feed is all
+      reference (the current half is empty).
+    - NULLs: the midpoint comes from EVERY row, NULL-valued ones
+      included. Callers that drop NULL values filter the OUTPUT on
+      their value key; Catalyst pushes that filter below the aggregate
+      into the feed side of the cross join, so the min/max subtree
+      still sees the whole feed. `anomaly.psi_drift` keeps NULLs (they
+      land in its ELSE bin).
+    - Shape: the min/max scalar is a lazy broadcast — it runs as the
+      build subtree of the same job that scans the feed (identical
+      broadcast subtrees are exchange-reused); materializing it eagerly
+      only added a sequential driver-blocking job per call (r12
+      job-count sweep).
+    - Streaming twins pass their ``(keys…, v, us, n)`` state with
+      ``us="us"``: the midpoint is only known once the feed is seen,
+      so the µs axis must live in state. PARITY SHAPE, NOT PRODUCTION:
+      that state is corpus-sized on an unbounded stream and exists to
+      prove availableNow == batch against the shared oracle. A
+      production monitor uses the watermarked windowed family (state
+      bounded by types × days-in-watermark × cents alphabet) or a
+      day-bucketed midpoint."""
+    from pyspark.sql import functions as F
+
+    stats = df.agg(
+        F.expr(f"min({us})").alias("mn"), F.expr(f"max({us})").alias("mx")
+    )
+    return df.crossJoin(F.broadcast(stats)).withColumn(
+        "is_ref", F.expr(us) <= F.expr("(mn + mx) div 2")
+    )
+
+
+def half_counts(
+    df: DataFrame,
+    keys: list[str],
+    value: str,
+    prefix: str,
+    weight: str | None = None,
+    us: str = FEED_US,
+) -> DataFrame:
+    """Per-(keys…, value) row counts of each `tag_halves` half:
+    ``(keys…, value, {prefix}_ref, {prefix}_cur)`` in ONE keyed,
+    map-side-combinable aggregate, bounded by the value alphabet, never
+    the feed. Feed rows count 1 each; streaming state rows pass their
+    count column as ``weight``, so both give the same relation. The
+    anomaly codas read ``d_*``, the analytics codas ``c_*``. NULL
+    values form their own group: filter the output on ``value`` to
+    drop them (see `tag_halves`)."""
+    from pyspark.sql import functions as F
+
+    w = F.col(weight) if weight else F.lit(1)
+    return (
+        tag_halves(df, us)
+        .select(*keys, value, "is_ref", w.alias("w"))
+        .groupBy(*keys, value)
+        .agg(
+            F.sum(F.when(F.col("is_ref"), F.col("w")).otherwise(0)).alias(
+                f"{prefix}_ref"
+            ),
+            F.sum(F.when(~F.col("is_ref"), F.col("w")).otherwise(0)).alias(
+                f"{prefix}_cur"
+            ),
+        )
+    )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.util import FEED_US, half_counts, materialize, tag_halves
 from ..sources.registry import (
     configure_session,
     events_read_schema,
@@ -223,7 +224,7 @@ def stream_rollup_incremental(
         if s.catalog.tableExists(table):
             merged = upsert(s.table(table), batch_df, ["bucket_s"])
             # break lineage before overwriting the table being read
-            merged.localCheckpoint(eager=True).write.mode("overwrite").saveAsTable(table)
+            materialize(merged).write.mode("overwrite").saveAsTable(table)
         else:
             batch_df.write.saveAsTable(table)
 
@@ -828,11 +829,11 @@ def stream_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
     ).agg(F.count("*").alias("n"))
-    # localCheckpoint: the coda self-joins the state relation, and a
+    # materialize: the coda self-joins the state relation, and a
     # memory-sink View self-join trips conflicting-attribute analysis;
     # the checkpointed LogicalRDD deduplicates per consumer (and is
     # what the batch path materializes anyway)
-    state = _run_to_memory(daily, "complete").localCheckpoint()
+    state = materialize(_run_to_memory(daily, "complete"))
     return pop_from_daily(state)
 
 
@@ -844,8 +845,8 @@ def stream_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation the batch op materializes); the quintile cuts and scoring
     run as the SHARED batch coda (`event_analytics.rfm_from_per_user`)
     over that sink. Replayed under availableNow the state equals the
-    batch per-user relation exactly, hence the shared oracle. The
-    localCheckpoint guards the coda's self-consumption of the memory
+    batch per-user relation exactly, hence the shared oracle.
+    materialize() guards the coda's self-consumption of the memory
     sink (the conflicting-references gotcha, NOTES)."""
     from ..operators.event_analytics import rfm_from_per_user
 
@@ -863,7 +864,7 @@ def stream_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("mon_cents"),
         )
     )
-    state = _run_to_memory(per_user, "complete").localCheckpoint()
+    state = materialize(_run_to_memory(per_user, "complete"))
     return rfm_from_per_user(state)
 
 
@@ -895,7 +896,7 @@ def stream_user_feature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.unix_micros("ts")).alias("max_us"),
         F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
     )
-    state = _run_to_memory(per_key, "complete").localCheckpoint()
+    state = materialize(_run_to_memory(per_key, "complete"))
     per_user = state.groupBy("user_id").agg(
         F.sum("cnt").cast("bigint").alias("n_events"),
         F.count_distinct("event_type").cast("int").alias("n_types"),
@@ -943,7 +944,7 @@ def stream_slo_burn(
         .cast("bigint")
         .alias("n_errors"),
     )
-    state = _run_to_memory(daily, "complete").localCheckpoint()
+    state = materialize(_run_to_memory(daily, "complete"))
     from ..operators.monitoring import slo_burn_from_daily
 
     return slo_burn_from_daily(state, budget_pct)
@@ -988,7 +989,7 @@ def stream_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
             for name, sql in TREND_SUMS_SQL.items()
         ]
     )
-    state = _run_to_memory(sums, "complete").localCheckpoint()
+    state = materialize(_run_to_memory(sums, "complete"))
     return (
         state.select(
             "event_type",
@@ -999,50 +1000,53 @@ def stream_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stream_timed_state(spark: SparkSession, sf_dir: str, *keys) -> DataFrame:
+    """The two-sample twins' ONE state: the events stream counted per
+    (keys…, event-µs) into a complete-mode memory sink — the
+    ``(keys…, us, n)`` relation `util.tag_halves` splits with
+    ``us="us"`` (midpoint, NULL and parity-versus-production trade
+    documented there). NULL values stay in state: the midpoint is
+    fixed over the WHOLE feed before any coda drops them. Always
+    materialized: `stream_welch`'s coda self-joins the state, and a
+    memory-sink self-join fails analysis (the
+    `stream_period_over_period` gotcha)."""
+    state_agg = _events_stream(spark, sf_dir).groupBy(
+        *keys, F.expr(FEED_US).alias("us")
+    ).agg(F.count("*").alias("n"))
+    return materialize(_run_to_memory(state_agg, "complete"))
+
+
+def _stream_half_counts(
+    spark: SparkSession, sf_dir: str, value: str, prefix: str
+) -> DataFrame:
+    """The streaming `util.half_counts`: per-(event_type, value) half
+    counts over `_stream_timed_state`, NULL values dropped — the
+    relation the batch member reduces the feed to, so every coda runs
+    unchanged. ``value`` is ``"value"`` or the integer ``"cents"``
+    axis."""
+    axis = (
+        F.expr("CAST(round(value * 100) AS BIGINT)")
+        if value == "cents"
+        else F.col("value")
+    )
+    state = _stream_timed_state(spark, sf_dir, "event_type", axis.alias(value))
+    per_value = half_counts(
+        state, ["event_type"], value, prefix, weight="n", us="us"
+    )
+    return per_value.filter(F.col(value).isNotNull())
+
+
 def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `anomaly.ks_drift`: the live distribution-
-    drift monitor. Exact two-sample KS needs the per-distinct-value
-    counts on both sides of the feed's temporal midpoint, and the
-    midpoint itself is only known once the feed is seen — so the
-    streaming state is the ONE aggregation keyed by
-    (event_type, value, event-µs): exactness over a stream costs
-    per-distinct-row state, the same documented trade as
-    `stream_contract_audit` (production would bound it by bucketing
-    values or windowing the reference sample). NULL-valued events stay
-    in the state because the batch op derives the midpoint from the
-    WHOLE feed before dropping them.
-
-    The coda over that sink is pure batch: midpoint from state
-    min/max, ref/cur tagging, reduce to per-value half counts, then
-    `ks_from_value_counts` — the SAME core as the batch operator, so
-    replayed under availableNow the result equals `ks_drift` exactly
-    and shares its oracle verbatim."""
+    drift monitor over `_stream_half_counts` (the two-sample state and
+    its trade: `util.tag_halves`). The coda is `ks_from_value_counts`,
+    the SAME core as the batch operator, so replayed under
+    availableNow the result equals `ks_drift` exactly and shares its
+    oracle verbatim."""
     from ..operators.anomaly import ks_from_value_counts
-    from ..operators.util import materialize
 
-    src = _events_stream(spark, sf_dir)
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    state_agg = src.groupBy(
-        "event_type", "value", us.alias("us")
-    ).agg(F.count("*").alias("n"))
-    state = _run_to_memory(state_agg, "complete")
-    stats = state.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
-    per_value = (
-        state.filter(F.col("value").isNotNull())
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "event_type",
-            "value",
-            (F.col("us") <= F.expr("(mn + mx) div 2")).alias("is_ref"),
-            "n",
-        )
-        .groupBy("event_type", "value")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), F.col("n")).otherwise(0)).alias("d_ref"),
-            F.sum(F.when(~F.col("is_ref"), F.col("n")).otherwise(0)).alias("d_cur"),
-        )
-    )
     # same diamond as the batch op: per_value feeds totals + the ECDF
+    per_value = _stream_half_counts(spark, sf_dir, "value", "d")
     return ks_from_value_counts(materialize(per_value))
 
 
@@ -1056,7 +1060,6 @@ def stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow state == the batch daily counts, hence the shared
     oracle verbatim."""
     from ..operators.anomaly import changepoint_from_daily
-    from ..operators.util import materialize
 
     src = _events_stream(spark, sf_dir)
     day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
@@ -1132,123 +1135,66 @@ def stream_line_boilerplate(
 
 def stream_psi_drift(spark: SparkSession, sf_dir: str, nbins: int = 10) -> DataFrame:
     """Streaming twin of `anomaly.psi_drift`: the live distribution-
-    stability monitor. Like `stream_ks_drift`, exactness costs
-    per-distinct-(value, event-µs) state — the feed midpoint AND the
-    reference deciles are only known once the feed is seen. The coda
-    reduces state to per-distinct-value half counts and replicates
-    `percentile_disc` EXACTLY with integer cross-multiplication
-    (cum·nbins ≥ i·n ⟺ cume_dist ≥ i/nbins — the SQL-standard
-    definition, no doubles near the cut), then reuses the batch bin
-    CASE and PSI term verbatim, so the availableNow result equals
-    `psi_drift` and shares its oracle. NULL values ride to the ELSE
-    bin exactly as the batch CASE sends them; the decile window runs
-    over the DISTINCT-VALUE relation only (the `ks_drift` ECDF
-    trade)."""
+    stability monitor over the `_stream_timed_state` per-(value,
+    event-µs) counts (the two-sample trade: `util.tag_halves`) — the
+    feed midpoint AND the reference deciles are only known once the
+    feed is seen. The coda reduces state to per-distinct-value half
+    counts and runs `psi_from_value_counts`, the batch coda verbatim
+    (exact `percentile_disc` replica, bin CASE, PSI term), so the
+    availableNow result equals `psi_drift` and shares its oracle. NULL
+    values ride to the ELSE bin exactly as the batch CASE sends
+    them."""
     from ..operators.anomaly import psi_from_value_counts
-    from ..operators.util import materialize
 
-    src = _events_stream(spark, sf_dir)
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    state_agg = src.groupBy("value", us.alias("us")).agg(F.count("*").alias("n"))
-    state = materialize(_run_to_memory(state_agg, "complete"))
-    stats = state.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
-    per_value = materialize(
-        state.crossJoin(F.broadcast(stats))
-        .select(
-            "value",
-            (F.col("us") <= F.expr("(mn + mx) div 2")).alias("is_ref"),
-            "n",
-        )
-        .groupBy("value")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), F.col("n")).otherwise(0)).alias("d_ref"),
-            F.sum(F.when(~F.col("is_ref"), F.col("n")).otherwise(0)).alias("d_cur"),
-        )
-    )
-    return psi_from_value_counts(per_value, nbins)
+    state = _stream_timed_state(spark, sf_dir, "value")
+    per_value = half_counts(state, [], "value", "d", weight="n", us="us")
+    return psi_from_value_counts(materialize(per_value), nbins)
 
 
 def stream_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `analytics.mannwhitney_u`: the live
-    distribution-free location-shift monitor. State is the one
-    (event_type, value, event-µs) count aggregation (the
-    `stream_ks_drift` trade); the coda reduces it to per-distinct-
-    value half counts and hands them to `mwu_from_value_counts` — the
-    SAME exact-integer core as the batch operator, so the availableNow
-    result equals `mannwhitney_u` and shares its oracle verbatim.
-    NULL values drop in the coda exactly where the batch op drops
-    them (after the whole-feed midpoint is fixed). PARITY SHAPE, NOT
-    PRODUCTION: the per-distinct-(type,value,µs) state is corpus-sized
-    on an unbounded stream — production monitoring uses the
-    watermarked windowed drift family (bounded by types × watermark
-    days × cents alphabet) or a day-bucketed midpoint."""
+    distribution-free location-shift monitor over `_stream_half_counts`
+    (trade: `util.tag_halves`); the coda is `mwu_from_value_counts`,
+    the SAME exact-integer core as the batch operator, so the
+    availableNow result equals `mannwhitney_u` and shares its oracle
+    verbatim."""
     from ..operators.analytics import mwu_from_value_counts
-    from ..operators.util import materialize
 
-    src = _events_stream(spark, sf_dir)
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    state_agg = src.groupBy("event_type", "value", us.alias("us")).agg(
-        F.count("*").alias("n")
+    return mwu_from_value_counts(
+        _stream_half_counts(spark, sf_dir, "value", "c")
     )
-    state = materialize(_run_to_memory(state_agg, "complete"))
-    stats = state.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
-    per_value = (
-        state.filter(F.col("value").isNotNull())
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "event_type",
-            "value",
-            (F.col("us") <= F.expr("(mn + mx) div 2")).alias("is_ref"),
-            "n",
-        )
-        .groupBy("event_type", "value")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), F.col("n")).otherwise(0)).alias("c_ref"),
-            F.sum(F.when(~F.col("is_ref"), F.col("n")).otherwise(0)).alias("c_cur"),
-        )
-    )
-    return mwu_from_value_counts(per_value)
 
 
 def stream_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `analytics.welch_ttest`: the live mean-shift
-    monitor. State is the (event_type, value, event-µs) count
-    aggregation (the `stream_ks_drift` trade — the midpoint needs the
-    whole feed); the coda rebuilds each side's exact decimal
+    monitor over the `_stream_timed_state` counts (trade:
+    `util.tag_halves`). The coda rebuilds each side's exact decimal
     sufficient statistics from the per-distinct-value counts
     (n = Σc, Σx = Σ value·c, Σx² = Σ value²·c — exact decimal
     arithmetic, so identical to the batch row-wise sums digit for
     digit) and hands them to `welch_from_sides`, the SAME finals as
     the batch operator. availableNow result == `welch_ttest`, oracle
-    shared verbatim. NULL values stay in state (the batch midpoint is
-    fixed before they drop) and are filtered in the coda."""
+    shared verbatim."""
     from ..operators.analytics import welch_from_sides
-    from ..operators.util import materialize
 
-    src = _events_stream(spark, sf_dir)
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    state_agg = src.groupBy("event_type", "value", us.alias("us")).agg(
-        F.count("*").alias("cnt")
-    )
-    state = materialize(_run_to_memory(state_agg, "complete"))
-    stats = state.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
+    state = _stream_timed_state(spark, sf_dir, "event_type", "value")
     sides = (
-        state.filter(F.col("value").isNotNull())
-        .crossJoin(F.broadcast(stats))
+        tag_halves(state, "us")
+        .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            (F.col("us") <= F.expr("(mn + mx) div 2")).alias("is_ref"),
+            "is_ref",
             F.col("value").cast("decimal(18,2)").alias("x"),
-            "cnt",
+            "n",
         )
         .groupBy("event_type", "is_ref")
         .agg(
-            F.sum("cnt").alias("n"),
-            F.sum(F.expr("x * CAST(cnt AS DECIMAL(20,0))")).alias("sx"),
+            F.sum("n").alias("n"),
+            F.sum(F.expr("x * CAST(n AS DECIMAL(20,0))")).alias("sx"),
             F.sum(
                 F.expr(
                     "CAST(CAST(x * x AS DECIMAL(38,4))"
-                    " * CAST(cnt AS DECIMAL(20,0)) AS DECIMAL(38,4))"
+                    " * CAST(n AS DECIMAL(20,0)) AS DECIMAL(38,4))"
                 )
             ).alias("sxx"),
         )
@@ -1273,7 +1219,6 @@ def stream_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL values stay in state (they count toward n, as in the batch
     count(*)) and are excluded from the power sums by SUM semantics."""
     from ..operators.analytics import moments_from_sums
-    from ..operators.util import materialize
 
     src = _events_stream(spark, sf_dir)
     state_agg = src.groupBy("event_type", "value").agg(F.count("*").alias("cnt"))
@@ -1310,7 +1255,6 @@ def stream_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cell counts are accumulation-order-free, so availableNow
     == batch digit for digit and the oracle is shared verbatim."""
     from ..operators.analytics import cramers_v_from_margins, margins_from_cells
-    from ..operators.util import materialize
 
     src = _events_stream(spark, sf_dir)
     dow = F.expr("(unix_micros(cast(ts as timestamp)) div 86400000000) % 7")
@@ -1331,7 +1275,6 @@ def stream_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         margins_from_cells,
         mutual_information_from_margins,
     )
-    from ..operators.util import materialize
 
     src = _events_stream(spark, sf_dir)
     dow = F.expr("(unix_micros(cast(ts as timestamp)) div 86400000000) % 7")
@@ -1439,18 +1382,18 @@ def stream_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `monitoring.value_percentiles_interp`: the
     live exact-percentile panel. The counts conversion pays its
     streaming dividend here — the state is the per-(type, value)
-    count relation (bounded by the value alphabet, the
-    `stream_ks_drift` trade), which is exactly the input
+    count relation (bounded by the value alphabet — no µs axis, unlike
+    `_stream_timed_state`), which is exactly the input
     `util.cont_quantiles_from_counts` takes in weighted form, so the
     coda is the SAME rank arithmetic and the batch oracle applies
     verbatim. (Spark's own `percentile` aggregate is not allowed in
     streaming complete mode without buffering every value per group —
     the OOM shape this family exists to avoid.)"""
-    from ..operators.util import cont_quantiles_from_counts, materialize
+    from ..operators.util import cont_quantiles_from_counts
 
     src = _events_stream(spark, sf_dir)
     state_agg = src.groupBy("event_type", "value").agg(F.count("*").alias("n"))
-    # localCheckpoint before the coda: the quantile helper joins two
+    # materialize before the coda: the quantile helper joins two
     # derivations of the state (groups × picked), and a memory-sink
     # View self-join fails analysis with conflicting references (the
     # streaming_period_over_period gotcha — LogicalRDD dedups per
@@ -1547,86 +1490,28 @@ def stream_encoding_audit(
 
 def stream_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `analytics.wasserstein_drift`: the live
-    earth-mover drift monitor — the panel's "how BIG is the shift, in
-    value units" number kept current per micro-batch. State is the
-    (event_type, cents, event-µs) count aggregation (the
-    `stream_mannwhitney` trade: the whole-feed midpoint needs the time
-    axis in state); the coda reduces it to per-distinct-cents half
-    counts and hands them to `wasserstein_from_value_counts` — the
-    SAME exact-integer trapezoid arithmetic as the batch operator, so
-    the availableNow result equals `wasserstein_drift` digit for digit
-    and shares its oracle verbatim. NULL values stay in state as a
-    NULL cents key (the batch midpoint is fixed over the WHOLE feed
-    before values drop — the `stream_mannwhitney` convention) and are
-    filtered in the coda."""
+    earth-mover drift monitor over the per-cents `_stream_half_counts`
+    (trade: `util.tag_halves`); coda `wasserstein_from_value_counts`
+    shared verbatim, so availableNow equals `wasserstein_drift` digit
+    for digit and shares its oracle."""
     from ..operators.analytics import wasserstein_from_value_counts
-    from ..operators.util import materialize
 
-    src = _events_stream(spark, sf_dir)
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    state_agg = src.groupBy(
-        "event_type",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-        us.alias("us"),
-    ).agg(F.count("*").alias("n"))
-    state = materialize(_run_to_memory(state_agg, "complete"))
-    stats = state.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
-    per_value = (
-        state.filter(F.col("cents").isNotNull())
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "event_type",
-            "cents",
-            (F.col("us") <= F.expr("(mn + mx) div 2")).alias("is_ref"),
-            "n",
-        )
-        .groupBy("event_type", "cents")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), F.col("n")).otherwise(0)).alias("c_ref"),
-            F.sum(F.when(~F.col("is_ref"), F.col("n")).otherwise(0)).alias("c_cur"),
-        )
+    return wasserstein_from_value_counts(
+        _stream_half_counts(spark, sf_dir, "cents", "c")
     )
-    return wasserstein_from_value_counts(per_value)
 
 
 def stream_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `analytics.cliffs_delta`: the live ordinal
-    effect-size monitor. State is the SAME (event_type, cents,
-    event-µs) count aggregation as `stream_wasserstein` — one relation
-    serves every member of the two-sample panel — and the coda is the
-    SHARED `cliffs_from_value_counts` cumsum algebra, so the
-    availableNow result equals `cliffs_delta` digit for digit and
-    shares its oracle verbatim. NULL values stay in state as a NULL
-    cents key (batch fixes the midpoint over the whole feed first)
-    and drop in the coda."""
+    effect-size monitor over the per-cents `_stream_half_counts`
+    (trade: `util.tag_halves`); coda `cliffs_from_value_counts` shared
+    verbatim, so availableNow equals `cliffs_delta` digit for digit
+    and shares its oracle."""
     from ..operators.analytics import cliffs_from_value_counts
-    from ..operators.util import materialize
 
-    src = _events_stream(spark, sf_dir)
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    state_agg = src.groupBy(
-        "event_type",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-        us.alias("us"),
-    ).agg(F.count("*").alias("n"))
-    state = materialize(_run_to_memory(state_agg, "complete"))
-    stats = state.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
-    per_value = (
-        state.filter(F.col("cents").isNotNull())
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "event_type",
-            "cents",
-            (F.col("us") <= F.expr("(mn + mx) div 2")).alias("is_ref"),
-            "n",
-        )
-        .groupBy("event_type", "cents")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), F.col("n")).otherwise(0)).alias("c_ref"),
-            F.sum(F.when(~F.col("is_ref"), F.col("n")).otherwise(0)).alias("c_cur"),
-        )
+    return cliffs_from_value_counts(
+        _stream_half_counts(spark, sf_dir, "cents", "c")
     )
-    return cliffs_from_value_counts(per_value)
 
 
 def stream_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1641,7 +1526,6 @@ def stream_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow == `jackknife_variance` and the batch oracle applies
     verbatim."""
     from ..operators.analytics import jackknife_from_bucket_stats
-    from ..operators.util import materialize
 
     src = _events_stream(spark, sf_dir)
     bucket = (
@@ -1676,14 +1560,13 @@ def stream_kendall(
     ordinal-association monitor over a document ingest stream. State
     is the (source, x, y) joint count relation — bounded by the
     LENGTH ALPHABETS (max chars/x_quant × max token count), never the
-    corpus, the family's `stream_mannwhitney` trade — and the coda is
+    corpus — and the coda is
     the SHARED `kendall_from_joint_counts`, so availableNow equals
     the batch τ-b digit for digit and the batch oracle applies
     verbatim. materialize() before the coda: the grid spine joins
     three derivations of the state (distinct-x × distinct-y ×
     counts), the memory-sink self-join gotcha."""
     from ..operators.analytics import kendall_from_joint_counts
-    from ..operators.util import materialize
 
     src = _documents_stream(spark, sf_dir)
     toks = F.filter(F.split("text", r"\s+"), lambda t: t != "")
@@ -1785,14 +1668,12 @@ def stream_windowed_ks(
 def stream_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `analytics.kruskal_wallis`: the live k-sample
     location monitor. State is the (event_type, value) count relation
-    — bounded by the value alphabet × k types, the
-    `stream_mannwhitney` trade WITHOUT its per-µs refinement (Kruskal
-    needs no feed midpoint, so the state is the smaller pure count
+    — bounded by the value alphabet × k types, `_stream_timed_state`
+    WITHOUT its µs axis (Kruskal needs no feed midpoint, so the state is the smaller pure count
     shape) — and the coda is the SHARED `kruskal_from_value_counts`,
     so availableNow equals the batch components digit for digit and
     the batch oracle applies verbatim."""
     from ..operators.analytics import kruskal_from_value_counts
-    from ..operators.util import materialize
 
     src = _events_stream(spark, sf_dir)
     state_agg = (
@@ -1810,8 +1691,6 @@ def _stream_dense_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     densified exactly as `anomaly._dense_daily_counts` does (the
     densify step is a coda over the bounded state, not state
     itself)."""
-    from ..operators.util import materialize
-
     src = _events_stream(spark, sf_dir)
     day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
     state_agg = src.groupBy("event_type", day.alias("day")).agg(
@@ -1874,7 +1753,6 @@ def stream_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch components digit for digit and the batch oracle
     applies verbatim."""
     from ..operators.analytics import brown_forsythe_from_counts
-    from ..operators.util import materialize
 
     src = _events_stream(spark, sf_dir)
     state_agg = (
@@ -1896,7 +1774,6 @@ def stream_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent, so availableNow equals the batch components
     digit for digit and the batch oracle applies verbatim."""
     from ..operators.analytics import anova_from_moments
-    from ..operators.util import materialize
 
     src = _events_stream(spark, sf_dir)
     state_agg = (
@@ -1926,7 +1803,6 @@ def stream_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared verbatim, so availableNow equals the batch table digit for
     digit and the batch oracle applies."""
     from ..operators.analytics import mood_from_value_counts
-    from ..operators.util import materialize
 
     src = _events_stream(spark, sf_dir)
     state_agg = (
@@ -1941,122 +1817,51 @@ def stream_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mood_from_value_counts(state)
 
 
-def _stream_half_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming construction of `anomaly.half_value_counts`: the
-    two-sample drift panel's state is the ONE aggregation keyed by
-    (event_type, value, event-µs) — exactness over a stream costs
-    per-distinct-row state, the documented `stream_ks_drift` trade —
-    and the coda re-derives the whole-feed midpoint from that state's
-    min/max before tagging halves, exactly as the batch helper does
-    over the feed. Returns the MATERIALIZED (event_type, value,
-    d_ref, d_cur) relation the family codas take.
-
-    PARITY SHAPE, NOT PRODUCTION: per-distinct-(type,value,µs) state
-    is corpus-sized on an unbounded stream — this twin exists to prove
-    availableNow == batch against the shared oracle. A production
-    deployment uses the watermarked windowed family instead
-    (`stream_windowed_ks` etc. over `_watermarked_day_cents_counts`,
-    state bounded by types × days-in-watermark × cents alphabet), or
-    a day-bucketed midpoint so the µs axis collapses to days."""
-    from ..operators.util import materialize
-
-    src = _events_stream(spark, sf_dir)
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    state_agg = src.groupBy("event_type", "value", us.alias("us")).agg(
-        F.count("*").alias("n")
-    )
-    state = materialize(_run_to_memory(state_agg, "complete"))
-    stats = state.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
-    per_value = (
-        state.filter(F.col("value").isNotNull())
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "event_type",
-            "value",
-            (F.col("us") <= F.expr("(mn + mx) div 2")).alias("is_ref"),
-            "n",
-        )
-        .groupBy("event_type", "value")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), F.col("n")).otherwise(0)).alias("d_ref"),
-            F.sum(F.when(~F.col("is_ref"), F.col("n")).otherwise(0)).alias("d_cur"),
-        )
-    )
-    return materialize(per_value)
-
-
 def stream_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `anomaly.anderson_darling`: the live
     tail-sensitive drift monitor over the shared
-    `_stream_half_value_counts` state; coda (`ad_from_value_counts`)
+    `_stream_half_counts`; coda (`ad_from_value_counts`)
     shared verbatim, so availableNow equals the batch panel digit for
     digit and the batch oracle applies."""
     from ..operators.anomaly import ad_from_value_counts
 
-    return ad_from_value_counts(_stream_half_value_counts(spark, sf_dir))
+    return ad_from_value_counts(
+        materialize(_stream_half_counts(spark, sf_dir, "value", "d"))
+    )
 
 
 def stream_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `anomaly.cramer_von_mises` over the shared
-    `_stream_half_value_counts` state; coda shared verbatim (same
+    `_stream_half_counts`; coda shared verbatim (same
     integer numerator), batch oracle applies."""
     from ..operators.anomaly import cvm_from_value_counts
 
-    return cvm_from_value_counts(_stream_half_value_counts(spark, sf_dir))
+    return cvm_from_value_counts(
+        materialize(_stream_half_counts(spark, sf_dir, "value", "d"))
+    )
 
 
 def stream_kuiper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `anomaly.kuiper_drift` over the shared
-    `_stream_half_value_counts` state; coda shared verbatim (signed
+    `_stream_half_counts`; coda shared verbatim (signed
     integer gaps), batch oracle applies."""
     from ..operators.anomaly import kuiper_from_value_counts
 
-    return kuiper_from_value_counts(_stream_half_value_counts(spark, sf_dir))
+    return kuiper_from_value_counts(
+        materialize(_stream_half_counts(spark, sf_dir, "value", "d"))
+    )
 
 
 def stream_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `analytics.hodges_lehmann`: the live robust
-    shift estimate. State is the `stream_mannwhitney` shape keyed on
-    integer cents ((event_type, cents, event-µs) counts — the
-    midpoint needs the µs axis); the coda reduces to per-cents half
-    counts and hands them to `hl_from_value_counts` — the SAME
-    selection-and-order-statistics core as the batch operator, so
-    availableNow equals `hodges_lehmann` and shares its oracle
-    verbatim. PARITY SHAPE, NOT PRODUCTION: (type,cents,µs) state is
-    corpus-sized on an unbounded stream — production uses a
-    day-bucketed midpoint (state collapses to types × days × cents)
-    or the watermarked windowed family."""
+    shift estimate over the per-cents `_stream_half_counts` (trade:
+    `util.tag_halves`); coda `hl_from_value_counts` shared verbatim,
+    so availableNow equals `hodges_lehmann` and shares its oracle."""
     from ..operators.analytics import hl_from_value_counts
-    from ..operators.util import materialize
 
-    src = _events_stream(spark, sf_dir)
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    # NULL-valued events stay in the state (NULL cents group): the
-    # batch op fixes the midpoint from the WHOLE feed before dropping
-    # NULLs — the stream_ks_drift rule
-    state_agg = src.groupBy(
-        "event_type",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-        us.alias("us"),
-    ).agg(F.count("*").alias("n"))
-    state = materialize(_run_to_memory(state_agg, "complete"))
-    stats = state.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
-    per_value = (
-        state.filter(F.col("cents").isNotNull())
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "event_type",
-            "cents",
-            (F.col("us") <= F.expr("(mn + mx) div 2")).alias("is_ref"),
-            "n",
-        )
-        .groupBy("event_type", "cents")
-        .agg(
-            F.sum(F.when(F.col("is_ref"), F.col("n")).otherwise(0)).alias("c_ref"),
-            F.sum(F.when(~F.col("is_ref"), F.col("n")).otherwise(0)).alias("c_cur"),
-        )
+    return hl_from_value_counts(
+        _stream_half_counts(spark, sf_dir, "cents", "c")
     )
-    return hl_from_value_counts(per_value)
 
 
 def stream_dow_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2067,7 +1872,6 @@ def stream_dow_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
     `dow_gof_from_daily`, so availableNow equals the batch table
     digit for digit and the batch oracle applies verbatim."""
     from ..operators.analytics import dow_gof_from_daily
-    from ..operators.util import materialize
 
     src = _events_stream(spark, sf_dir)
     state_agg = src.groupBy(
@@ -2152,13 +1956,15 @@ def stream_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `anomaly.ansari_bradley`: the live two-sample
-    SCALE monitor over the shared `_stream_half_value_counts` state;
+    SCALE monitor over the shared `_stream_half_counts`;
     coda (`ab_from_value_counts`) shared verbatim, so availableNow
     equals the batch panel digit for digit and the batch oracle
     applies."""
     from ..operators.anomaly import ab_from_value_counts
 
-    return ab_from_value_counts(_stream_half_value_counts(spark, sf_dir))
+    return ab_from_value_counts(
+        materialize(_stream_half_counts(spark, sf_dir, "value", "d"))
+    )
 
 
 def stream_windowed_ks_by_cohort(
@@ -2211,7 +2017,7 @@ def _stream_daily_cents_sums(
     per-distinct-value complete-mode twins, this is the production
     state shape: a year of days is 365 rows per type no matter the
     feed rate)."""
-    from ..operators.util import materialize, with_cohort
+    from ..operators.util import with_cohort
 
     src = _events_stream(spark, sf_dir)
     keys = ["event_type"]
@@ -2304,13 +2110,15 @@ def stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_lepage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `anomaly.lepage_test`: the live combined
-    location+scale monitor over the shared `_stream_half_value_counts`
-    state; coda (`lepage_from_value_counts`) shared verbatim, so
+    location+scale monitor over the shared `_stream_half_counts`
+   ; coda (`lepage_from_value_counts`) shared verbatim, so
     availableNow equals the batch panel digit for digit and the batch
     oracle applies."""
     from ..operators.anomaly import lepage_from_value_counts
 
-    return lepage_from_value_counts(_stream_half_value_counts(spark, sf_dir))
+    return lepage_from_value_counts(
+        materialize(_stream_half_counts(spark, sf_dir, "value", "d"))
+    )
 
 
 def stream_windowed_cvm(
@@ -2342,12 +2150,12 @@ def stream_windowed_kuiper(
 def stream_mood_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `anomaly.mood_scale_test`: the live
     tail-weighted dispersion monitor over the shared
-    `_stream_half_value_counts` state; coda
+    `_stream_half_counts`; coda
     (`mood_scale_from_value_counts`) shared verbatim, so availableNow
     equals the batch panel digit for digit and the batch oracle
     applies."""
     from ..operators.anomaly import mood_scale_from_value_counts
 
     return mood_scale_from_value_counts(
-        _stream_half_value_counts(spark, sf_dir)
+        materialize(_stream_half_counts(spark, sf_dir, "value", "d"))
     )
