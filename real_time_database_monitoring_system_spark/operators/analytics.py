@@ -31,6 +31,7 @@ from .util import disc_quantiles_from_counts as _disc_quantiles
 from .util import half_counts as _half_counts
 from .util import require_alphabet_cap as _require_alphabet_cap
 from .util import tag_halves as _tag_halves
+from .util import windowed_day_cents_counts
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -2101,8 +2102,6 @@ def windowed_cliffs_delta(events: DataFrame) -> DataFrame:
     shift; the coda is `cliffs_from_value_counts` keyed by
     (event_type, day) — exact pair-class counts by cumsum algebra,
     never pair enumeration."""
-    from .util import windowed_day_cents_counts
-
     return windowed_cliffs_from_counts(windowed_day_cents_counts(events))
 
 
@@ -2511,16 +2510,7 @@ def windowed_wasserstein(events: DataFrame) -> DataFrame:
     `windowed_psi` convention: a day scores only if its previous day
     has data), and the W1 window runs per (type, day) over it. No
     windows over the feed."""
-    counts = (
-        events.filter(F.col("value").isNotNull())
-        .groupBy(
-            "event_type",
-            F.expr(f"{FEED_US} div 86400000000").alias("day"),
-            F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-        )
-        .agg(F.count("*").alias("c"))
-    )
-    return windowed_wasserstein_from_counts(counts)
+    return windowed_wasserstein_from_counts(windowed_day_cents_counts(events))
 
 
 def windowed_wasserstein_from_counts(counts: DataFrame) -> DataFrame:
@@ -2577,8 +2567,6 @@ def windowed_wasserstein_by_cohort(events: DataFrame) -> DataFrame:
     `day_shift_half_counts` pairing, `wasserstein_from_value_counts`
     coda keyed by (type, cohort, day) — exact integer trapezoid
     algebra, one fixed-shape division."""
-    from .util import windowed_day_cents_counts
-
     return windowed_w1_by_cohort_from_counts(
         windowed_day_cents_counts(events, by_cohort=True)
     )

@@ -26,6 +26,7 @@ from .util import materialize as _materialize
 from .util import FEED_US
 from .util import disc_quantiles_from_counts as _disc_quantiles
 from .util import half_counts as _half_counts
+from .util import windowed_day_cents_counts
 
 # 1 / Φ^{-1}(3/4): scales MAD to estimate σ under normality
 _MAD_SIGMA = 1.4826
@@ -455,21 +456,28 @@ def ks_drift(events: DataFrame) -> DataFrame:
     )
 
 
-def ks_from_value_counts(
-    per_value: DataFrame, keys: list[str] | None = None
-) -> DataFrame:
-    """Finish the two-sample KS statistic from the reduced
-    ``(event_type, value, d_ref, d_cur)`` relation — the shared core
-    between batch `ks_drift` and its streaming twin
-    (`streaming.rollup.stream_ks_drift`), so the statistic cannot
-    drift between two copies (the `mad_baseline` sharing rule).
+def _pooled_ecdf(per_value: DataFrame, keys: list[str]) -> DataFrame:
+    """The pooled ECDF every two-sample coda starts from, built once
+    over the reduced ``(keys…, value, d_ref, d_cur)`` half-count
+    relation. One row per (keys…, value) with:
+
+    - ``n_ref`` / ``n_cur``: the per-key half totals (a #keys-row
+      aggregate joined back as a broadcast), ``nt`` their sum;
+    - ``d_ref``: the value's reference count, ``l`` its pooled count;
+    - ``b``: the pooled cumulative count up to and including the value
+      (the running ref and cur counts over one window per key ordered
+      by ``value``);
+    - ``gap``: the integer ECDF-gap numerator c_ref·n_cur − c_cur·n_ref
+      of those running counts, in DECIMAL so a trillion-row half can't
+      overflow a BIGINT.
 
     The input feeds two consumers (half totals + the ECDF window), so
-    callers pass a MATERIALIZED relation (batch materializes the
-    grouped counts; the streaming twin's memory-sink state is already
-    stored). ``keys`` defaults to the per-type shape; `windowed_ks`
-    passes (event_type, day) for the sliding-reference variant."""
-    keys = keys or ["event_type"]
+    callers pass a MATERIALIZED relation: batch materializes the
+    grouped counts, a streaming twin's memory-sink state is already
+    stored, the windowed members go through `_windowed_coda`. Each coda
+    keeps only its own aggregate and its stat select, aliasing these
+    columns to the vocabulary of the SQL fragments it shares with the
+    oracle."""
     totals = per_value.groupBy(*keys).agg(
         F.sum("d_ref").alias("n_ref"), F.sum("d_cur").alias("n_cur")
     )
@@ -480,17 +488,39 @@ def ks_from_value_counts(
     )
     ecdf = per_value.select(
         *keys,
+        (F.col("d_ref") + F.col("d_cur")).alias("l"),
+        "d_ref",
         F.sum("d_ref").over(w).alias("c_ref"),
         F.sum("d_cur").over(w).alias("c_cur"),
     )
-    gaps = ecdf.join(F.broadcast(totals), list(keys)).select(
+    return ecdf.join(F.broadcast(totals), list(keys)).select(
         *keys,
         "n_ref",
         "n_cur",
-        F.abs(
+        "d_ref",
+        "l",
+        (F.col("n_ref") + F.col("n_cur")).alias("nt"),
+        (F.col("c_ref") + F.col("c_cur")).alias("b"),
+        (
             F.col("c_ref").cast("decimal(20,0)") * F.col("n_cur").cast("decimal(18,0)")
             - F.col("c_cur").cast("decimal(20,0)") * F.col("n_ref").cast("decimal(18,0)")
         ).alias("gap"),
+    )
+
+
+def ks_from_value_counts(
+    per_value: DataFrame, keys: list[str] | None = None
+) -> DataFrame:
+    """Finish the two-sample KS statistic (the largest |gap|) over the
+    `_pooled_ecdf` of the reduced ``(keys…, value, d_ref, d_cur)``
+    relation — shared by batch `ks_drift` and its streaming twin
+    (`streaming.rollup.stream_ks_drift`), so the statistic cannot
+    drift between two copies (the `mad_baseline` sharing rule).
+    ``keys`` defaults to the per-type shape; `windowed_ks` passes
+    (event_type, day) for the sliding-reference variant."""
+    keys = keys or ["event_type"]
+    gaps = _pooled_ecdf(per_value, keys).select(
+        *keys, "n_ref", "n_cur", F.abs("gap").alias("gap")
     )
     return (
         gaps.groupBy(*keys)
@@ -558,9 +588,9 @@ def anderson_darling(events: DataFrame) -> DataFrame:
     ad_scaled ≈ A²·n_ref·n_cur·10⁴ stays BIGINT-exact to N ≈ 10⁷ per
     type; past that the ANSI sum raises loudly (the family contract).
 
-    Scale shape: identical to `ks_drift` — the feed reduces once to
-    the shared `util.half_counts` relation; the ECDF runs per type
-    over that reduced relation; totals broadcast."""
+    Scale shape: identical to `ks_drift` — the shared
+    `util.half_counts` reduction, then the one `_pooled_ecdf` (a
+    per-type window over the reduced relation, totals broadcast)."""
     counts = _half_counts(events, ["event_type"], "value", "d")
     return ad_from_value_counts(
         _materialize(counts.filter(F.col("value").isNotNull()))
@@ -570,40 +600,13 @@ def anderson_darling(events: DataFrame) -> DataFrame:
 def ad_from_value_counts(
     per_value: DataFrame, keys: list[str] | None = None
 ) -> DataFrame:
-    """Anderson–Darling coda over the reduced ``(keys…, value, d_ref,
-    d_cur)`` half-count relation — shared verbatim by the batch
-    operator and `streaming.rollup.stream_anderson_darling` (the
-    `ks_from_value_counts` pattern). Callers pass a MATERIALIZED
-    relation (it feeds the totals AND the ECDF window)."""
+    """Anderson–Darling coda over the `_pooled_ecdf` of the reduced
+    ``(keys…, value, d_ref, d_cur)`` relation — shared by the batch
+    operator and `streaming.rollup.stream_anderson_darling`."""
     keys = keys or ["event_type"]
-    totals = per_value.groupBy(*keys).agg(
-        F.sum("d_ref").alias("n_ref"), F.sum("d_cur").alias("n_cur")
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ecdf = per_value.select(
-        *keys,
-        (F.col("d_ref") + F.col("d_cur")).alias("l"),
-        F.sum("d_ref").over(w).alias("c_ref"),
-        F.sum("d_cur").over(w).alias("c_cur"),
-    )
-    terms = ecdf.join(F.broadcast(totals), list(keys)).select(
-        *keys,
-        "n_ref",
-        "n_cur",
-        "l",
-        (F.col("n_ref") + F.col("n_cur")).alias("nt"),
-        (F.col("c_ref") + F.col("c_cur")).alias("b"),
-        (
-            F.col("c_ref").cast("decimal(20,0)") * F.col("n_cur").cast("decimal(18,0)")
-            - F.col("c_cur").cast("decimal(20,0)") * F.col("n_ref").cast("decimal(18,0)")
-        ).alias("gap"),
-    )
     return (
-        terms.groupBy(*keys)
+        _pooled_ecdf(per_value, keys)
+        .groupBy(*keys)
         .agg(
             F.first("n_ref").alias("n_ref"),
             F.first("n_cur").alias("n_cur"),
@@ -651,10 +654,11 @@ def cramer_von_mises(events: DataFrame) -> DataFrame:
     (DECIMAL(38,0) accumulation — l·gap² is O(N·(nm)²), exact to
     N ≈ 10⁷ per type, ANSI-loud beyond); ONE rounded double division
     at the edge (`CVM_STAT_SQL`, shared with the oracle) — the
-    `ks_from_value_counts` rule exactly.
+    `KS_STAT_SQL` rule exactly.
 
-    Scale shape: identical to `ks_drift` — shared `util.half_counts`
-    reduction, per-type window over the reduced relation only."""
+    Scale shape: identical to `ks_drift` — the shared
+    `util.half_counts` reduction, then the one `_pooled_ecdf` over the
+    reduced relation only."""
     counts = _half_counts(events, ["event_type"], "value", "d")
     return cvm_from_value_counts(
         _materialize(counts.filter(F.col("value").isNotNull()))
@@ -664,37 +668,13 @@ def cramer_von_mises(events: DataFrame) -> DataFrame:
 def cvm_from_value_counts(
     per_value: DataFrame, keys: list[str] | None = None
 ) -> DataFrame:
-    """Cramér–von Mises coda over the reduced ``(keys…, value, d_ref,
-    d_cur)`` relation — shared verbatim by the batch operator and
-    `streaming.rollup.stream_cramer_von_mises`."""
+    """Cramér–von Mises coda over the `_pooled_ecdf` of the reduced
+    ``(keys…, value, d_ref, d_cur)`` relation — shared by the batch
+    operator and `streaming.rollup.stream_cramer_von_mises`."""
     keys = keys or ["event_type"]
-    totals = per_value.groupBy(*keys).agg(
-        F.sum("d_ref").alias("n_ref"), F.sum("d_cur").alias("n_cur")
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ecdf = per_value.select(
-        *keys,
-        (F.col("d_ref") + F.col("d_cur")).alias("l"),
-        F.sum("d_ref").over(w).alias("c_ref"),
-        F.sum("d_cur").over(w).alias("c_cur"),
-    )
-    gaps = ecdf.join(F.broadcast(totals), list(keys)).select(
-        *keys,
-        "n_ref",
-        "n_cur",
-        (F.col("n_ref") + F.col("n_cur")).alias("nt"),
-        "l",
-        (
-            F.col("c_ref").cast("decimal(20,0)") * F.col("n_cur").cast("decimal(18,0)")
-            - F.col("c_cur").cast("decimal(20,0)") * F.col("n_ref").cast("decimal(18,0)")
-        ).alias("gap"),
-    )
     return (
-        gaps.groupBy(*keys)
+        _pooled_ecdf(per_value, keys)
+        .groupBy(*keys)
         .agg(
             F.first("n_ref").alias("n_ref"),
             F.first("n_cur").alias("n_cur"),
@@ -738,8 +718,9 @@ def kuiper_drift(events: DataFrame) -> DataFrame:
     integral D⁺/D⁻ numerators emit as BIGINT (≤ n_ref·n_cur — exact
     to N ≈ 6·10⁹ per type, ANSI-loud beyond).
 
-    Scale shape: identical to `ks_drift` — shared `util.half_counts`
-    reduction, per-type window over the reduced relation only."""
+    Scale shape: identical to `ks_drift` — the shared
+    `util.half_counts` reduction, then the one `_pooled_ecdf` over the
+    reduced relation only."""
     counts = _half_counts(events, ["event_type"], "value", "d")
     return kuiper_from_value_counts(
         _materialize(counts.filter(F.col("value").isNotNull()))
@@ -749,39 +730,18 @@ def kuiper_drift(events: DataFrame) -> DataFrame:
 def kuiper_from_value_counts(
     per_value: DataFrame, keys: list[str] | None = None
 ) -> DataFrame:
-    """Kuiper coda over the reduced ``(keys…, value, d_ref, d_cur)``
-    relation — shared verbatim by the batch operator and
-    `streaming.rollup.stream_kuiper`."""
+    """Kuiper coda over the `_pooled_ecdf` of the reduced ``(keys…,
+    value, d_ref, d_cur)`` relation, keeping the SIGNED gap — shared by
+    the batch operator and `streaming.rollup.stream_kuiper`."""
     keys = keys or ["event_type"]
-    totals = per_value.groupBy(*keys).agg(
-        F.sum("d_ref").alias("n_ref"), F.sum("d_cur").alias("n_cur")
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ecdf = per_value.select(
-        *keys,
-        F.sum("d_ref").over(w).alias("c_ref"),
-        F.sum("d_cur").over(w).alias("c_cur"),
-    )
-    gaps = ecdf.join(F.broadcast(totals), list(keys)).select(
-        *keys,
-        "n_ref",
-        "n_cur",
-        (
-            F.col("c_ref").cast("decimal(20,0)") * F.col("n_cur").cast("decimal(18,0)")
-            - F.col("c_cur").cast("decimal(20,0)") * F.col("n_ref").cast("decimal(18,0)")
-        ).alias("sgap"),
-    )
     return (
-        gaps.groupBy(*keys)
+        _pooled_ecdf(per_value, keys)
+        .groupBy(*keys)
         .agg(
             F.first("n_ref").alias("n_ref"),
             F.first("n_cur").alias("n_cur"),
-            F.greatest(F.max("sgap"), F.lit(0).cast("decimal(38,0)")).alias("dp"),
-            F.greatest(F.max(-F.col("sgap")), F.lit(0).cast("decimal(38,0)")).alias("dm"),
+            F.greatest(F.max("gap"), F.lit(0).cast("decimal(38,0)")).alias("dp"),
+            F.greatest(F.max(-F.col("gap")), F.lit(0).cast("decimal(38,0)")).alias("dm"),
         )
         .select(
             *keys,
@@ -1381,7 +1341,7 @@ def windowed_ks(events: DataFrame) -> DataFrame:
     is `ks_from_value_counts` keyed by (event_type, day) — integer
     cross-multiplied ECDF gaps, one rounded double division per row
     (`KS_STAT_SQL`, shared with the oracle)."""
-    return windowed_ks_from_counts(_windowed_cents_counts(events))
+    return windowed_ks_from_counts(windowed_day_cents_counts(events))
 
 
 def windowed_ks_from_counts(counts: DataFrame) -> DataFrame:
@@ -1389,25 +1349,40 @@ def windowed_ks_from_counts(counts: DataFrame) -> DataFrame:
     relation — shared verbatim by the batch operator and
     `streaming.rollup.stream_windowed_ks` (whose watermarked state IS
     this relation over the finalized days)."""
+    return _windowed_coda(counts, ks_from_value_counts)
+
+
+def _windowed_coda(counts: DataFrame, coda) -> DataFrame:
+    """Run a two-sample ``coda`` day over day: each day of the
+    (keys…, day, cents, c) count relation scores against the previous
+    day, paired by the shared `analytics.day_shift_half_counts` shift
+    and keyed by (keys…, day). The keys are every column of ``counts``
+    but day, cents and c, so the by-cohort relation keys by (event
+    type, cohort) with no parameter.
+
+    Materialized TWICE (review findings r11/r12): the day shift reads
+    ``counts`` twice (the diamond rule), and every coda reads its input
+    in at least two branches (the half totals and the ECDF window; the
+    Mann–Whitney window too for Lepage) — without the second
+    materialize the full-outer day-shift join recomputes per branch.
+
+    A day whose previous day is empty has no reference to score
+    against, so it is dropped (the windowed_wasserstein convention)
+    instead of emitting a NULL-statistic row; Lepage's Mann–Whitney
+    join already drops such days."""
     from .analytics import day_shift_half_counts
 
-    # materialized TWICE (the windowed_lepage rule, r12 review): the
-    # downstream coda reads per_value in TWO branches (totals + ECDF
-    # window, joined) — without this the full-outer day-shift join
-    # recomputes per branch
+    keys = [c for c in counts.columns if c not in ("day", "cents", "c")]
     per_value = _materialize(
-        day_shift_half_counts(_materialize(counts)).select(
-            "event_type",
+        day_shift_half_counts(_materialize(counts), keys=keys).select(
+            *keys,
             "day",
             F.col("cents").alias("value"),
             F.col("c_ref").alias("d_ref"),
             F.col("c_cur").alias("d_cur"),
         )
     )
-    # a day whose previous day is empty has no reference to score
-    # against — drop it (the windowed_wasserstein convention) instead
-    # of emitting a NULL-ks row
-    return ks_from_value_counts(per_value, keys=["event_type", "day"]).filter(
+    return coda(per_value, keys=[*keys, "day"]).filter(
         (F.col("n_ref") >= 1) & (F.col("n_cur") >= 1)
     )
 
@@ -1426,7 +1401,7 @@ def windowed_lepage(events: DataFrame) -> DataFrame:
     `lepage_from_value_counts` coda keyed by (event_type, day) — every
     component statistic and null moment in exact integer arithmetic,
     the `LEPAGE_*_SQL` edge fragments verbatim."""
-    return windowed_lepage_from_counts(_windowed_cents_counts(events))
+    return windowed_lepage_from_counts(windowed_day_cents_counts(events))
 
 
 def windowed_lepage_from_counts(counts: DataFrame) -> DataFrame:
@@ -1434,24 +1409,7 @@ def windowed_lepage_from_counts(counts: DataFrame) -> DataFrame:
     c) relation — shared verbatim by the batch operator and
     `streaming.rollup.stream_windowed_lepage` (whose watermarked state
     IS this relation over the finalized days)."""
-    from .analytics import day_shift_half_counts
-
-    per_value = _materialize(
-        day_shift_half_counts(_materialize(counts)).select(
-            "event_type",
-            "day",
-            F.col("cents").alias("value"),
-            F.col("c_ref").alias("d_ref"),
-            F.col("c_cur").alias("d_cur"),
-        )
-    )
-    # materialized TWICE deliberately: the coda reads per_value in
-    # THREE branches (mwu window+agg, totals, AB spans) — without the
-    # second materialize the full-outer day-shift join recomputes per
-    # branch (review finding r11). Zero-count rows from the pairing
-    # stay IN the relation (they carry the other side's mass); days
-    # with an empty previous day drop inside the mwu coda's n filters
-    return lepage_from_value_counts(per_value, keys=["event_type", "day"])
+    return _windowed_coda(counts, lepage_from_value_counts)
 
 
 # Pettitt approximate significance: 2·exp(−6K²/(T³+T²)), capped at 1.
@@ -1728,8 +1686,6 @@ def windowed_ks_by_cohort(events: DataFrame) -> DataFrame:
     Scale shape: unchanged from `windowed_ks` — the count relation
     grows by the cohort factor (bounded, 4+1 here) and the feed still
     reduces in ONE map-side-combinable pass."""
-    from .util import windowed_day_cents_counts
-
     return windowed_ks_by_cohort_from_counts(
         windowed_day_cents_counts(events, by_cohort=True)
     )
@@ -1741,25 +1697,7 @@ def windowed_ks_by_cohort_from_counts(counts: DataFrame) -> DataFrame:
     operator and `streaming.rollup.stream_windowed_ks_by_cohort`
     (whose watermarked state IS this relation over the finalized
     days)."""
-    from .analytics import day_shift_half_counts
-
-    # materialized TWICE (the windowed_lepage rule, r12 review): the
-    # KS coda reads per_value in TWO branches (totals + ECDF window)
-    per_value = _materialize(
-        day_shift_half_counts(
-            _materialize(counts), keys=["event_type", "cohort"]
-        ).select(
-            "event_type",
-            "cohort",
-            "day",
-            F.col("cents").alias("value"),
-            F.col("c_ref").alias("d_ref"),
-            F.col("c_cur").alias("d_cur"),
-        )
-    )
-    return ks_from_value_counts(
-        per_value, keys=["event_type", "cohort", "day"]
-    ).filter((F.col("n_ref") >= 1) & (F.col("n_cur") >= 1))
+    return _windowed_coda(counts, ks_from_value_counts)
 
 
 # Ansari–Bradley per-value term at SCALE=10⁴ (the AD_TERM_SQL
@@ -1810,11 +1748,32 @@ def ansari_bradley(events: DataFrame) -> DataFrame:
     null moments E[AB] and var(AB) from n_ref/n_cur in closed form.
 
     Scale shape: identical to `ks_drift` — the shared
-    `util.half_counts` reduction, one per-type window over the
-    reduced relation, totals broadcast."""
+    `util.half_counts` reduction, then the one `_pooled_ecdf` (a
+    per-type window over the reduced relation, totals broadcast)."""
     counts = _half_counts(events, ["event_type"], "value", "d")
     return ab_from_value_counts(
         _materialize(counts.filter(F.col("value").isNotNull()))
+    )
+
+
+def _ab_terms(per_value: DataFrame, keys: list[str]) -> DataFrame:
+    """The Ansari–Bradley per-value rank-span terms over the
+    `_pooled_ecdf`: the value's tied span ends at pooled rank b and
+    holds l observations, so its doubled score sum is s2 = f2(b) −
+    f2(b − l). Columns are renamed to the vocabulary `AB_TERM_SQL`
+    shares with the oracle (c_ref = the value's ref count, t = its
+    pooled count). Shared by `ab_from_value_counts` and
+    `lepage_from_value_counts`."""
+    return _pooled_ecdf(per_value, keys).select(
+        *keys,
+        "n_ref",
+        "n_cur",
+        F.col("d_ref").alias("c_ref"),
+        F.col("l").alias("t"),
+        (
+            F.expr(AB_F2_SQL.format(x="b"))
+            - F.expr(AB_F2_SQL.format(x="(b - l)"))
+        ).alias("s2"),
     )
 
 
@@ -1822,44 +1781,13 @@ def ab_from_value_counts(
     per_value: DataFrame, keys: list[str] | None = None
 ) -> DataFrame:
     """Ansari–Bradley coda over the reduced ``(keys…, value, d_ref,
-    d_cur)`` relation — shared verbatim by the batch operator and
-    `streaming.rollup.stream_ansari_bradley`."""
+    d_cur)`` relation — shared by the batch operator and
+    `streaming.rollup.stream_ansari_bradley`; its per-value terms come
+    from `_ab_terms`, which `lepage_from_value_counts` shares."""
     keys = keys or ["event_type"]
-    totals = per_value.groupBy(*keys).agg(
-        F.sum("d_ref").alias("n_ref"), F.sum("d_cur").alias("n_cur")
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    spans = per_value.select(
-        *keys,
-        F.col("d_ref").alias("c_ref"),
-        (F.col("d_ref") + F.col("d_cur")).alias("t"),
-        (F.sum(F.col("d_ref") + F.col("d_cur")).over(w)).alias("b_rank"),
-    )
-    terms = spans.join(F.broadcast(totals), list(keys)).select(
-        *keys,
-        "n_ref",
-        "n_cur",
-        "c_ref",
-        "t",
-        (F.col("n_ref") + F.col("n_cur")).alias("nt"),
-        "b_rank",
-    ).select(
-        *keys,
-        "n_ref",
-        "n_cur",
-        "c_ref",
-        "t",
-        (
-            F.expr(AB_F2_SQL.format(x="b_rank"))
-            - F.expr(AB_F2_SQL.format(x="(b_rank - t)"))
-        ).alias("s2"),
-    )
     return (
-        terms.groupBy(*keys)
+        _ab_terms(per_value, keys)
+        .groupBy(*keys)
         .agg(
             F.first("n_ref").alias("n_ref"),
             F.first("n_cur").alias("n_cur"),
@@ -1904,8 +1832,8 @@ def mood_scale_test(events: DataFrame) -> DataFrame:
     the cvm_num edge precedent, exact below 2⁵³.
 
     Scale shape: identical to `ks_drift` — the shared
-    `util.half_counts` reduction, one per-type window over the
-    reduced relation, totals broadcast."""
+    `util.half_counts` reduction, then the one `_pooled_ecdf` (a
+    per-type window over the reduced relation, totals broadcast)."""
     counts = _half_counts(events, ["event_type"], "value", "d")
     return mood_scale_from_value_counts(
         _materialize(counts.filter(F.col("value").isNotNull()))
@@ -1915,37 +1843,21 @@ def mood_scale_test(events: DataFrame) -> DataFrame:
 def mood_scale_from_value_counts(
     per_value: DataFrame, keys: list[str] | None = None
 ) -> DataFrame:
-    """Mood squared-rank coda over the reduced ``(keys…, value,
-    d_ref, d_cur)`` relation — shared verbatim by the batch operator
-    and `streaming.rollup.stream_mood_scale`."""
+    """Mood squared-rank coda over the `_pooled_ecdf` of the reduced
+    ``(keys…, value, d_ref, d_cur)`` relation — shared by the batch
+    operator and `streaming.rollup.stream_mood_scale`."""
     keys = keys or ["event_type"]
-    totals = per_value.groupBy(*keys).agg(
-        F.sum("d_ref").alias("n_ref"), F.sum("d_cur").alias("n_cur")
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    spans = per_value.select(
-        *keys,
-        F.col("d_ref").alias("c_ref"),
-        (F.col("d_ref") + F.col("d_cur")).alias("t"),
-        (F.sum(F.col("d_ref") + F.col("d_cur")).over(w)).alias("b_rank"),
-    )
-    terms = spans.join(F.broadcast(totals), list(keys)).select(
+    terms = _pooled_ecdf(per_value, keys).select(
         *keys,
         "n_ref",
         "n_cur",
-        "c_ref",
-        "t",
-        # dev = 2r̄ − N − 1 = 2·cum_before + t − N with cum_before =
-        # b_rank − t
-        (
-            F.lit(2) * (F.col("b_rank") - F.col("t"))
-            + F.col("t")
-            - (F.col("n_ref") + F.col("n_cur"))
-        ).alias("dev"),
+        F.col("d_ref").alias("c_ref"),
+        F.col("l").alias("t"),
+        # dev = 2r̄ − N − 1 = 2·cum_before + t − N with t = l and
+        # cum_before = b − l
+        (F.lit(2) * (F.col("b") - F.col("l")) + F.col("l") - F.col("nt")).alias(
+            "dev"
+        ),
     )
     return (
         terms.groupBy(*keys)
@@ -2060,9 +1972,11 @@ def lepage_test(events: DataFrame) -> DataFrame:
     verbatim with the oracle.
 
     Scale shape: identical to `ks_drift` — ONE feed reduction to the
-    per-distinct-value half counts, per-type windows over the reduced
-    relation, totals broadcast. Types living entirely in one half drop
-    (no two-sample statistic exists), the `mannwhitney_u` convention."""
+    per-distinct-value half counts; the AB side runs over the one
+    `_pooled_ecdf`, the Wilcoxon side over the Mann–Whitney window,
+    both per type over the reduced relation. Types living entirely in
+    one half drop (no two-sample statistic exists), the
+    `mannwhitney_u` convention."""
     counts = _half_counts(events, ["event_type"], "value", "d")
     return lepage_from_value_counts(
         _materialize(counts.filter(F.col("value").isNotNull()))
@@ -2088,44 +2002,7 @@ def lepage_from_value_counts(
         ),
         keys=keys,
     ).select(*keys, "z_num", "tie_term")
-    totals = per_value.groupBy(*keys).agg(
-        F.sum("d_ref").alias("n_ref"), F.sum("d_cur").alias("n_cur")
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    spans = per_value.select(
-        *keys,
-        F.col("d_ref").alias("c_ref"),
-        (F.col("d_ref") + F.col("d_cur")).alias("t"),
-        (F.sum(F.col("d_ref") + F.col("d_cur")).over(w)).alias("b_rank"),
-    )
-    t2 = (
-        spans.join(F.broadcast(totals), list(keys))
-        .select(
-            *keys,
-            "n_ref",
-            "n_cur",
-            "c_ref",
-            "t",
-            (F.col("n_ref") + F.col("n_cur")).alias("nt"),
-            "b_rank",
-        )
-        .select(
-            *keys,
-            "n_ref",
-            "n_cur",
-            "c_ref",
-            "t",
-            (
-                F.expr(AB_F2_SQL.format(x="b_rank"))
-                - F.expr(AB_F2_SQL.format(x="(b_rank - t)"))
-            ).alias("s2"),
-        )
-    )
-    ab = t2.groupBy(*keys).agg(
+    ab = _ab_terms(per_value, keys).groupBy(*keys).agg(
         F.first("n_ref").alias("n_ref"),
         F.first("n_cur").alias("n_cur"),
         F.sum(F.expr(AB_TERM_SQL)).alias("ab_scaled"),
@@ -2176,7 +2053,7 @@ def windowed_anderson_darling(events: DataFrame) -> DataFrame:
     by the SHARED `analytics.day_shift_half_counts` shift; the coda is
     `ad_from_value_counts` keyed by (event_type, day) — order-free
     fixed-point integer terms (`AD_TERM_SQL`), one final division."""
-    return windowed_ad_from_counts(_windowed_cents_counts(events))
+    return windowed_ad_from_counts(windowed_day_cents_counts(events))
 
 
 def windowed_ad_from_counts(counts: DataFrame) -> DataFrame:
@@ -2184,37 +2061,7 @@ def windowed_ad_from_counts(counts: DataFrame) -> DataFrame:
     relation — shared verbatim by the batch operator and
     `streaming.rollup.stream_windowed_anderson_darling` (whose
     watermarked state IS this relation over the finalized days)."""
-    from .analytics import day_shift_half_counts
-
-    # materialized TWICE (the windowed_lepage rule, r12 review): the
-    # downstream coda reads per_value in TWO branches (totals + ECDF
-    # window, joined) — without this the full-outer day-shift join
-    # recomputes per branch
-    per_value = _materialize(
-        day_shift_half_counts(_materialize(counts)).select(
-            "event_type",
-            "day",
-            F.col("cents").alias("value"),
-            F.col("c_ref").alias("d_ref"),
-            F.col("c_cur").alias("d_cur"),
-        )
-    )
-    # a day with an empty previous day has no reference to score
-    # against (the windowed_wasserstein convention)
-    return ad_from_value_counts(per_value, keys=["event_type", "day"]).filter(
-        (F.col("n_ref") >= 1) & (F.col("n_cur") >= 1)
-    )
-
-
-def _windowed_cents_counts(events: DataFrame) -> DataFrame:
-    """The (event_type, day, cents, c) count relation every windowed
-    drift member reduces the feed to — the shared builder now lives in
-    `operators.util.windowed_day_cents_counts` (ADVICE r10: one
-    definition of the round(value*100) axis) and is reused by the
-    KS/AD/CvM/Kuiper variants here plus `analytics.windowed_cliffs_delta`."""
-    from .util import windowed_day_cents_counts
-
-    return windowed_day_cents_counts(events)
+    return _windowed_coda(counts, ad_from_value_counts)
 
 
 def windowed_cramer_von_mises(events: DataFrame) -> DataFrame:
@@ -2225,31 +2072,14 @@ def windowed_cramer_von_mises(events: DataFrame) -> DataFrame:
     machinery end-to-end: `day_shift_half_counts` pairing, the
     `cvm_from_value_counts` coda keyed by (event_type, day) — pure
     integer numerator, one fixed-shape division."""
-    return windowed_cvm_from_counts(_windowed_cents_counts(events))
+    return windowed_cvm_from_counts(windowed_day_cents_counts(events))
 
 
 def windowed_cvm_from_counts(counts: DataFrame) -> DataFrame:
     """Sliding-reference CvM coda over the (event_type, day, cents,
     c) relation — shared verbatim by the batch operator and
     `streaming.rollup.stream_windowed_cvm`."""
-    from .analytics import day_shift_half_counts
-
-    # materialized TWICE (the windowed_lepage rule, r12 review): the
-    # downstream coda reads per_value in TWO branches (totals + ECDF
-    # window, joined) — without this the full-outer day-shift join
-    # recomputes per branch
-    per_value = _materialize(
-        day_shift_half_counts(_materialize(counts)).select(
-            "event_type",
-            "day",
-            F.col("cents").alias("value"),
-            F.col("c_ref").alias("d_ref"),
-            F.col("c_cur").alias("d_cur"),
-        )
-    )
-    return cvm_from_value_counts(per_value, keys=["event_type", "day"]).filter(
-        (F.col("n_ref") >= 1) & (F.col("n_cur") >= 1)
-    )
+    return _windowed_coda(counts, cvm_from_value_counts)
 
 
 def windowed_kuiper(events: DataFrame) -> DataFrame:
@@ -2259,31 +2089,14 @@ def windowed_kuiper(events: DataFrame) -> DataFrame:
     (bimodal migration) that windowed KS halves. Shared machinery:
     `day_shift_half_counts` pairing, `kuiper_from_value_counts` keyed
     by (event_type, day) — signed integer gaps, two exact maxima."""
-    return windowed_kuiper_from_counts(_windowed_cents_counts(events))
+    return windowed_kuiper_from_counts(windowed_day_cents_counts(events))
 
 
 def windowed_kuiper_from_counts(counts: DataFrame) -> DataFrame:
     """Sliding-reference Kuiper coda over the (event_type, day,
     cents, c) relation — shared verbatim by the batch operator and
     `streaming.rollup.stream_windowed_kuiper`."""
-    from .analytics import day_shift_half_counts
-
-    # materialized TWICE (the windowed_lepage rule, r12 review): the
-    # downstream coda reads per_value in TWO branches (totals + ECDF
-    # window, joined) — without this the full-outer day-shift join
-    # recomputes per branch
-    per_value = _materialize(
-        day_shift_half_counts(_materialize(counts)).select(
-            "event_type",
-            "day",
-            F.col("cents").alias("value"),
-            F.col("c_ref").alias("d_ref"),
-            F.col("c_cur").alias("d_cur"),
-        )
-    )
-    return kuiper_from_value_counts(
-        per_value, keys=["event_type", "day"]
-    ).filter((F.col("n_ref") >= 1) & (F.col("n_cur") >= 1))
+    return _windowed_coda(counts, kuiper_from_value_counts)
 
 
 def _dense_daily_counts(events: DataFrame) -> DataFrame:

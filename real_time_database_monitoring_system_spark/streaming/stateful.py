@@ -96,14 +96,9 @@ def _advance_funnel(
         if len(pdf) == 0:
             continue  # the _gap_buckets empty-chunk guard (r12 review)
         pdf = pdf.sort_values(["us", "event_id"])
-        for us, et in zip(pdf["us"], pdf["event_type"], strict=True):
-            us = int(us)
-            if et == "view" and t1 < 0:
-                t1 = us
-            elif et == "click" and t1 >= 0 and us > t1 and t2 < 0:
-                t2 = us
-            elif et == "purchase" and t2 >= 0 and us > t2 and t3 < 0:
-                t3 = us
+        t1, t2, t3 = _fold_chain(
+            t1, t2, t3, zip(pdf["us"], pdf["event_type"], strict=True)
+        )
     state.update((t1, t2, t3))
     yield pd.DataFrame({"user_id": [user_id], "t1": [t1], "t2": [t2], "t3": [t3]})
 
@@ -203,8 +198,9 @@ WM_FUNNEL_OUT_SCHEMA = (
 
 def _fold_chain(t1: int, t2: int, t3: int, events) -> tuple[int, int, int]:
     """Advance the greedy-earliest funnel chain over (us, event_type)
-    pairs already sorted by event time — the same transition rule as
-    `_advance_funnel`."""
+    pairs already sorted by event time — the one view→click→purchase
+    transition rule, shared by `_advance_funnel` and the watermarked
+    funnel."""
     for us, et in events:
         us = int(us)
         if et == "view" and t1 < 0:
