@@ -47,18 +47,30 @@ def _norm_rows(cols, rows):
 
 def compare_query(spark, con, name: str, sf_dir: str) -> list[str]:
     """Return a list of mismatch descriptions (empty = pass)."""
-    problems: list[str] = []
-    sdf = queries()[name](spark, sf_dir)
-    spark_rows = sdf.collect()
-    spark_cols = sdf.columns
+    return compare_frame(queries()[name](spark, sf_dir), run_oracle(con, name))
+
+
+def run_oracle(con, name: str):
+    """(column names, rows) of entry `name`'s DuckDB oracle, or None
+    for a rows-only entry (no oracle)."""
     ora = oracle_sql().get(name)
     if ora is None:
+        return None
+    res = con.execute(ora)
+    return [d[0] for d in res.description], res.fetchall()
+
+
+def compare_frame(sdf, oracle) -> list[str]:
+    """Mismatches between the built entry `sdf` and its `run_oracle`
+    result (empty = pass)."""
+    problems: list[str] = []
+    spark_rows = sdf.collect()
+    spark_cols = sdf.columns
+    if oracle is None:
         if len(spark_rows) == 0:
             problems.append("rows-only check: Spark returned 0 rows")
         return problems
-    res = con.execute(ora)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
+    duck_cols, duck_rows = oracle
     if sorted(spark_cols) != sorted(duck_cols):
         problems.append(f"columns differ: spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
         return problems

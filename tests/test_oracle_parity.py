@@ -3,22 +3,63 @@ the local twin of the driver's t2 correctness gate."""
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from __spark_entry__ import queries
-from tests.oracle_harness import compare_query, duck_connection
+from tests.oracle_harness import compare_frame, duck_connection, run_oracle
 
 QUERY_NAMES = sorted(queries())
 
+# Output schema of each entry, recorded by the first test that builds
+# it. Building an entry runs its `util.materialize` jobs (and, for the
+# streaming twins, whole availableNow queries), so the two schema-only
+# tests below read this record instead of building all entries twice
+# more; on a miss (a test run alone) they build the entry themselves.
+# Only the schema is kept, never the DataFrame, so its materialized
+# blocks stay collectable.
+_SCHEMAS: dict[str, StructType] = {}
+
+
+def _build(spark, sf_dir: str, name: str) -> DataFrame:
+    df = queries()[name](spark, sf_dir)
+    _SCHEMAS[name] = df.schema
+    return df
+
+
+def _schema(spark, sf_dir: str, name: str) -> StructType:
+    if name not in _SCHEMAS:
+        _build(spark, sf_dir, name)
+    return _SCHEMAS[name]
+
 
 @pytest.fixture(scope="module")
-def duck(sf_dir):
-    return duck_connection(sf_dir)
+def oracles(request, sf_dir):
+    """`run_oracle` futures for the parity tests this session selected,
+    computed in their run order on one background thread with its own
+    DuckDB connection, so each DuckDB oracle runs while Spark works on
+    the entries before it. A test waits only for its own oracle, and
+    an oracle's error is raised in its test."""
+    names = [
+        item.callspec.params["name"]
+        for item in request.session.items
+        if item.originalname == "test_query_matches_oracle"
+    ]
+    con = duck_connection(sf_dir)
+    pool = ThreadPoolExecutor(max_workers=1)
+    futures = {name: pool.submit(run_oracle, con, name) for name in names}
+    yield futures
+    pool.shutdown(cancel_futures=True)
+    con.close()
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, duck, sf_dir, name):
-    problems = compare_query(spark, duck, name, sf_dir)
+def test_query_matches_oracle(spark, oracles, sf_dir, name):
+    sdf = _build(spark, sf_dir, name)
+    problems = compare_frame(sdf, oracles.pop(name).result())
     assert not problems, f"{name}: {problems}"
 
 
@@ -30,13 +71,12 @@ def test_no_complex_toplevel_columns(spark, sf_dir, name):
     output must therefore be flat: no top-level array/map/struct
     column. Operators keep their typed APIs; the `queries()` wrapper
     is where flattening (array_join/to_json) belongs. Schema-only —
-    no job runs."""
+    reads the schema the parity test recorded for the entry."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    df = queries()[name](spark, sf_dir)
     bad = [
         f.name
-        for f in df.schema.fields
+        for f in _schema(spark, sf_dir, name).fields
         if isinstance(f.dataType, (ArrayType, MapType, StructType))
     ]
     assert not bad, (
@@ -57,13 +97,12 @@ def test_no_decimal_or_binary_at_hashed_edge(spark, sf_dir, name):
     same reason complex types are: bytes cells are not portable
     through the pandas canonicalizer. Rule: decimal arithmetic stays
     INTERNAL; the hashed edge emits DOUBLE (or BIGINT where integral).
-    Schema-only — no job runs."""
+    Schema-only — reads the schema the parity test recorded."""
     from pyspark.sql.types import BinaryType, DecimalType
 
-    df = queries()[name](spark, sf_dir)
     bad = [
         f"{f.name}:{f.dataType.simpleString()}"
-        for f in df.schema.fields
+        for f in _schema(spark, sf_dir, name).fields
         if isinstance(f.dataType, (DecimalType, BinaryType))
     ]
     assert not bad, (
