@@ -8,8 +8,10 @@ warehouse-scale equivalent keeps the rollup as a materialized view and
 maintains it from the change stream: a delta of N rows touches O(N)
 groups, never the historical feed. This module implements the
 classic count/sum self-maintainable-aggregate algebra (signed delta
-aggregation + merge), the batch twin of
-`streaming/rollup.stream_rollup_incremental`'s foreachBatch upsert.
+aggregation + merge). Its streaming counterpart,
+`streaming/rollup.stream_rollup_incremental`, needs no delta algebra:
+the complete-mode state store holds the rollup itself, and foreachBatch
+overwrites the table with it once per micro-batch.
 
 Scale shape:
 - The signed delta aggregates map-side first — the only data-sized

@@ -5,9 +5,11 @@
 of executor block storage. A direct ``localCheckpoint`` anywhere else
 silently keeps the executor-loss hazard the mode exists to remove.
 With ``localCheckpoint`` made to raise, the connected-components loop
-behind `dedup.keeper_list` and the foreachBatch MERGE of
-`streaming.rollup.stream_rollup_incremental` must still run in
-reliable mode and return the local-mode rows."""
+behind `dedup.keeper_list` must still run in reliable mode, write its
+checkpoint files and return the local-mode rows. The rollup half pins
+that `streaming.rollup.stream_rollup_incremental` returns the same rows
+in both modes; on a fresh table it breaks no lineage at all (its
+micro-batches overwrite the table from complete-mode state)."""
 
 from __future__ import annotations
 
