@@ -3051,8 +3051,9 @@ def quantile_drift(events: DataFrame) -> DataFrame:
 
     Scale shape: the feed reduces ONCE to the (type, day, cents)
     count relation (bounded by types × days × value alphabet); the
-    quantile windows and the previous-day self-join both ride that
-    materialized relation. No windows over the feed."""
+    cumulative window and the type-7 pick run over that relation and
+    the previous-day pairing over its (type, day) rows. No windows over
+    the feed, and no Spark job runs while the query is built."""
     counts = (
         events.filter(F.col("value").isNotNull())
         .groupBy(
@@ -3069,39 +3070,51 @@ def quantile_drift_from_counts(counts: DataFrame) -> DataFrame:
     """Quantile-drift coda over an already-reduced (event_type, day,
     cents, c) count relation — shared verbatim by the batch operator
     and `streaming.rollup.stream_quantile_drift` (whose watermarked
-    state IS this relation over finalized days). Materialized twice
-    over: the count relation feeds the quantile pass AND the per-day
-    totals; the scored relation feeds both sides of the previous-day
-    join (the diamond rule)."""
-    from .util import cont_quantiles_from_counts
+    state IS this relation over finalized days). One lazy chain:
 
-    counts = _materialize(counts)
-    q = cont_quantiles_from_counts(
-        counts, ["event_type", "day"], "cents", QUANTILE_DRIFT_QS, weight="c"
+    - one cumulative-count window pass per (type, day) that also
+      carries the day's total, so n_day counts rows with NULL cents
+      while the quantiles ignore them (an all-NULL day emits NULL
+      quantiles);
+    - the type-7 pick of `util.cont_quantiles_from_counts` (the same
+      expressions, `util._type7_exprs`) plus n_day, one row per
+      (type, day);
+    - deltas against the type's previous calendar day, read through a
+      range frame of exactly day − 1 over the (type, day) rows: (type,
+      day) is unique, so the frame holds that day's one row or none,
+      the left self-join on day + 1 without the join; a day after a
+      gap gets NULL deltas."""
+    from .util import _type7_exprs
+
+    keys = ["event_type", "day"]
+    valued = F.when(F.col("cents").isNotNull(), F.col("c"))
+    group = Window.partitionBy(*keys)
+    running = group.orderBy("cents").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
-    n = counts.groupBy("event_type", "day").agg(
-        F.sum("c").cast("bigint").alias("n_day")
+    cum = counts.select(
+        *keys,
+        "cents",
+        F.sum(valued).over(running).alias("_cum"),
+        F.sum(valued).over(group).alias("_n"),
+        F.sum("c").over(group).alias("_n_day"),
     )
-    cur = _materialize(q.join(n, ["event_type", "day"]))
-    prev = cur.select(
-        "event_type",
-        (F.col("day") + 1).alias("day"),
-        *[F.col(a).alias(f"_prev_{a}") for a, _, _ in QUANTILE_DRIFT_QS],
+    aggs, finals = _type7_exprs("cents", QUANTILE_DRIFT_QS)
+    cur = (
+        cum.groupBy(*keys)
+        .agg(F.min("_n_day").alias("n_day"), *aggs)
+        .select(*keys, "n_day", *finals)
     )
-    return (
-        cur.join(prev, ["event_type", "day"], "left")
-        .select(
-            "event_type",
-            "day",
-            "n_day",
-            *[F.col(a).alias(f"{a}_cents") for a, _, _ in QUANTILE_DRIFT_QS],
-            *[
-                (F.col(a) - F.col(f"_prev_{a}")).alias(f"d{a[1:]}_cents")
-                for a, _, _ in QUANTILE_DRIFT_QS
-            ],
-        )
-        .orderBy("event_type", "day")
-    )
+    prev_day = Window.partitionBy("event_type").orderBy("day").rangeBetween(-1, -1)
+    return cur.select(
+        *keys,
+        "n_day",
+        *[F.col(a).alias(f"{a}_cents") for a, _, _ in QUANTILE_DRIFT_QS],
+        *[
+            (F.col(a) - F.max(a).over(prev_day)).alias(f"d{a[1:]}_cents")
+            for a, _, _ in QUANTILE_DRIFT_QS
+        ],
+    ).orderBy(*keys)
 
 
 def brown_forsythe(events: DataFrame) -> DataFrame:

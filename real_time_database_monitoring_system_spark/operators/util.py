@@ -232,33 +232,43 @@ def cont_quantiles_from_counts(
     aggregation maintains — `stream_value_percentiles` feeds its
     complete-mode state here, the `mwu_from_value_counts` pattern);
     rows then contribute `weight` occurrences instead of 1."""
-    from pyspark.sql import functions as F
-
     def pick(cum: DataFrame, keys: list[str]) -> DataFrame:
-        aggs = []
-        finals = list(keys)
-        for alias, num, den in quantiles:
-            # per-group integer target: i = ((n-1)*num) div den, rem = mod
-            i_q = F.expr(f"((_n - 1) * {num}) div {den}")
-            aggs.append(
-                F.min(F.when(F.col("_cum") > i_q, F.col(col))).alias(f"_lo_{alias}")
-            )
-            aggs.append(
-                F.min(F.when(F.col("_cum") > i_q + 1, F.col(col))).alias(f"_hi_{alias}")
-            )
-            aggs.append(
-                F.min(F.expr(f"((_n - 1) * {num}) % {den}")).alias(f"_rem_{alias}")
-            )
-            finals.append(
-                F.expr(
-                    f"CAST(_lo_{alias} AS DOUBLE) + (CAST(_rem_{alias} AS DOUBLE)"
-                    f" * (CAST(coalesce(_hi_{alias}, _lo_{alias}) AS DOUBLE)"
-                    f" - CAST(_lo_{alias} AS DOUBLE))) / CAST({den} AS DOUBLE)"
-                ).alias(alias)
-            )
-        return cum.groupBy(*keys).agg(*aggs).select(*finals)
+        aggs, finals = _type7_exprs(col, quantiles)
+        return cum.groupBy(*keys).agg(*aggs).select(*keys, *finals)
 
     return _quantiles_from_counts(df, keys, col, weight, pick)
+
+
+def _type7_exprs(col: str, quantiles: list[tuple[str, int, int]]) -> tuple[list, list]:
+    """The type-7 rule of `cont_quantiles_from_counts` as expressions
+    over a cumulative-count relation carrying `col`, `_cum` and `_n`:
+    (per-group aggregates, final columns over those aggregates), one
+    final column per (alias, num, den) entry. The one copy of the
+    interpolation formula, shared with the `analytics.quantile_drift`
+    coda, which adds its own aggregate to the same pass."""
+    from pyspark.sql import functions as F
+
+    aggs, finals = [], []
+    for alias, num, den in quantiles:
+        # per-group integer target: i = ((n-1)*num) div den, rem = mod
+        i_q = F.expr(f"((_n - 1) * {num}) div {den}")
+        aggs.append(
+            F.min(F.when(F.col("_cum") > i_q, F.col(col))).alias(f"_lo_{alias}")
+        )
+        aggs.append(
+            F.min(F.when(F.col("_cum") > i_q + 1, F.col(col))).alias(f"_hi_{alias}")
+        )
+        aggs.append(
+            F.min(F.expr(f"((_n - 1) * {num}) % {den}")).alias(f"_rem_{alias}")
+        )
+        finals.append(
+            F.expr(
+                f"CAST(_lo_{alias} AS DOUBLE) + (CAST(_rem_{alias} AS DOUBLE)"
+                f" * (CAST(coalesce(_hi_{alias}, _lo_{alias}) AS DOUBLE)"
+                f" - CAST(_lo_{alias} AS DOUBLE))) / CAST({den} AS DOUBLE)"
+            ).alias(alias)
+        )
+    return aggs, finals
 
 
 def _quantiles_from_counts(

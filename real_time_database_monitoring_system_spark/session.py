@@ -10,6 +10,15 @@ in both regimes:
   timestamp arithmetic is identical across engines (the DuckDB oracle
   evaluates naive timestamps).
 - Arrow enabled for the few pandas-UDF paths (multimodal decode).
+- PySpark's per-call origin capture off. With it on, every Column
+  function records its Python call site over py4j (about ten round
+  trips per call: building one pass of perfbench's interactive_mix
+  took 3675 py4j commands with it on, 1435 with it off). Runtime
+  errors keep their error class and message; only their DataFrame
+  context block changes, from the Python function and ``file:line``
+  that built the failing expression (``"__truediv__" was called from
+  job.py:7``) to the JVM method py4j reached (``"divide" was called
+  from ...NativeMethodAccessorImpl.invoke0(Native Method)``).
 """
 
 from __future__ import annotations
@@ -42,6 +51,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # The trade (module docstring): about ten py4j round trips per
+        # Column function call (active-session lookup, JVM class
+        # lookup, conf read, origin set and clear) against the Python
+        # file:line in error context blocks. PySpark reads this once
+        # per process and caches it, so it is set at build time,
+        # before any Column function runs with a session active.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # 100 TB posture: don't let tiny files explode task counts locally,
         # and keep broadcast threshold at default 10 MB (dimension tables
         # region/nation/supplier stay broadcast-able at any SF).

@@ -1748,8 +1748,11 @@ def stream_quantile_drift(
     state discipline as `stream_windowed_wasserstein` (per-(window,
     type, cents) counts under a real watermark, evicted as event time
     advances, append over finalized days); the coda is the SHARED
-    `quantile_drift_from_counts`, so the finalized-day rows equal the
-    batch panel digit for digit."""
+    `quantile_drift_from_counts` — one lazy chain over the finalized
+    state, each day's deltas read from the same type's row for the day
+    before through a range frame — so the finalized-day rows equal the
+    batch panel digit for digit, and nothing runs after the replay
+    until the caller's action."""
     from ..operators.analytics import quantile_drift_from_counts
 
     return quantile_drift_from_counts(

@@ -580,10 +580,110 @@ def test_quantile_drift_budget(spark):
 
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
     n = checks.count_exchanges(analytics.quantile_drift(ev))
-    # 1 feed-width exchange (the (type, day, cents) groupBy);
-    # quantile windows, totals and the prev-day join all ride the
-    # materialized bounded count relation
+    # 1 feed-width exchange (the (type, day, cents) groupBy); the
+    # cumulative window, the type-7 pick and the previous-day frame all
+    # run over the bounded count relation and its (type, day) rows
     assert n <= 10, f"quantile_drift: {n} exchanges > budget 10"
+
+
+def test_quantile_drift_builds_without_jobs(spark):
+    from real_time_database_monitoring_system_spark.sources.registry import load_table
+
+    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    sc = spark.sparkContext
+    group = "construct-quantile-drift"
+    sc.setJobGroup(group, "construction only")
+    try:
+        analytics.quantile_drift(ev)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_stream_quantile_drift_coda_builds_without_jobs(spark, monkeypatch):
+    # the replay itself runs jobs; the job group starts once the
+    # stream has finished, so only the coda's construction is counted
+    from real_time_database_monitoring_system_spark.streaming import rollup
+
+    sc = spark.sparkContext
+    group = "construct-stream-quantile-drift-coda"
+    run_to_memory = rollup._run_to_memory
+
+    def then_count(stream_df, mode):
+        out = run_to_memory(stream_df, mode)
+        sc.setJobGroup(group, "coda construction only")
+        return out
+
+    monkeypatch.setattr(rollup, "_run_to_memory", then_count)
+    try:
+        rollup.stream_quantile_drift(spark, "/root/testdata/sf0.001")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def _type7(values, num, den):
+    """Reference type-7 quantile with the coda's integer rank split."""
+    v = sorted(values)
+    i, rem = divmod((len(v) - 1) * num, den)
+    lo = v[i]
+    hi = v[i + 1] if i + 1 < len(v) else lo
+    return float(lo) + (float(rem) * (float(hi) - float(lo))) / float(den)
+
+
+def test_quantile_drift_coda_edge_cases(spark):
+    # hand-built (event_type, day, cents, c) relation, rows deliberately
+    # out of order: type a has days 0, 1, 2 (day 1 a single row, day 0
+    # also carries a NULL-cents row); type b has days 0 and 2 only (a
+    # gap: day 2 gets NULL deltas, never paired with day 0); type c's
+    # only row on day 0 is NULL-cents
+    rows = [
+        ("b", 2, 700, 2),
+        ("a", 0, 100, 2),
+        ("b", 0, 100, 1),
+        ("a", 2, 300, 1),
+        ("a", 0, None, 1),
+        ("b", 0, 900, 3),
+        ("a", 1, 500, 3),
+        ("a", 0, 400, 1),
+        ("c", 0, None, 2),
+        ("a", 2, 800, 4),
+        ("b", 2, 200, 1),
+    ]
+    counts = spark.createDataFrame(
+        rows, "event_type string, day bigint, cents bigint, c bigint"
+    )
+    got = [r.asDict() for r in analytics.quantile_drift_from_counts(counts).collect()]
+
+    qs = analytics.QUANTILE_DRIFT_QS
+    values: dict[tuple[str, int], list[int]] = {}
+    n_day: dict[tuple[str, int], int] = {}
+    for t, d, cents, c in rows:
+        n_day[(t, d)] = n_day.get((t, d), 0) + c
+        values.setdefault((t, d), []).extend([cents] * c if cents is not None else [])
+    want = []
+    for t, d in sorted(n_day):
+        q = {a: _type7(values[(t, d)], num, den) if values[(t, d)] else None for a, num, den in qs}
+        prev = values.get((t, d - 1))
+        row = {"event_type": t, "day": d, "n_day": n_day[(t, d)]}
+        row.update({f"{a}_cents": q[a] for a, _, _ in qs})
+        row.update(
+            {
+                f"d{a[1:]}_cents": q[a] - _type7(prev, num, den) if prev else None
+                for a, num, den in qs
+            }
+        )
+        want.append(row)
+    assert got == want
+    by_key = {(r["event_type"], r["day"]): r for r in got}
+    assert by_key[("b", 2)]["d50_cents"] is None  # day gap: no pairing with day 0
+    assert by_key[("a", 1)]["p99_cents"] == 500.0  # single-row day
+    assert by_key[("a", 0)]["n_day"] == 4  # the NULL-cents row counts
+    assert by_key[("c", 0)] == {
+        "event_type": "c", "day": 0, "n_day": 2,
+        **{f"{a}_cents": None for a, _, _ in qs},
+        **{f"d{a[1:]}_cents": None for a, _, _ in qs},
+    }
 
 
 def test_brown_forsythe_brute_force(spark):
