@@ -3072,46 +3072,32 @@ def quantile_drift_from_counts(counts: DataFrame) -> DataFrame:
     and `streaming.rollup.stream_quantile_drift` (whose watermarked
     state IS this relation over finalized days). One lazy chain:
 
-    - one cumulative-count window pass per (type, day) that also
-      carries the day's total, so n_day counts rows with NULL cents
-      while the quantiles ignore them (an all-NULL day emits NULL
-      quantiles);
-    - the type-7 pick of `util.cont_quantiles_from_counts` (the same
-      expressions, `util._type7_exprs`) plus n_day, one row per
-      (type, day);
+    - `util.type7_from_counts` over the relation keyed by (type, day):
+      one cumulative-count window pass and the type-7 pick of
+      `util.cont_quantiles_from_counts`, with n_day = Σc in the same
+      aggregate, so n_day counts rows with NULL cents while the
+      quantiles ignore them (an all-NULL day emits NULL quantiles);
     - deltas against the type's previous calendar day, read through a
       range frame of exactly day − 1 over the (type, day) rows: (type,
-      day) is unique, so the frame holds that day's one row or none,
-      the left self-join on day + 1 without the join; a day after a
-      gap gets NULL deltas."""
-    from .util import _type7_exprs
+      day) is unique, so the frame holds that day's one row or none; a
+      day after a gap gets NULL deltas. Rows with a NULL type or day
+      get NULL deltas too, as in the oracle's join on day + 1, where
+      NULL keys never match (the frame alone would pair NULL-type
+      days, and a NULL day's bound ties with the row itself)."""
+    from .util import type7_from_counts
 
     keys = ["event_type", "day"]
-    valued = F.when(F.col("cents").isNotNull(), F.col("c"))
-    group = Window.partitionBy(*keys)
-    running = group.orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = counts.select(
-        *keys,
-        "cents",
-        F.sum(valued).over(running).alias("_cum"),
-        F.sum(valued).over(group).alias("_n"),
-        F.sum("c").over(group).alias("_n_day"),
-    )
-    aggs, finals = _type7_exprs("cents", QUANTILE_DRIFT_QS)
-    cur = (
-        cum.groupBy(*keys)
-        .agg(F.min("_n_day").alias("n_day"), *aggs)
-        .select(*keys, "n_day", *finals)
+    cur = type7_from_counts(
+        counts, keys, "cents", "c", QUANTILE_DRIFT_QS, n_day=F.sum("c")
     )
     prev_day = Window.partitionBy("event_type").orderBy("day").rangeBetween(-1, -1)
+    keyed = F.col("event_type").isNotNull() & F.col("day").isNotNull()
     return cur.select(
         *keys,
         "n_day",
         *[F.col(a).alias(f"{a}_cents") for a, _, _ in QUANTILE_DRIFT_QS],
         *[
-            (F.col(a) - F.max(a).over(prev_day)).alias(f"d{a[1:]}_cents")
+            F.when(keyed, F.col(a) - F.max(a).over(prev_day)).alias(f"d{a[1:]}_cents")
             for a, _, _ in QUANTILE_DRIFT_QS
         ],
     ).orderBy(*keys)

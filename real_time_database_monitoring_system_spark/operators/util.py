@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -233,19 +233,46 @@ def cont_quantiles_from_counts(
     complete-mode state here, the `mwu_from_value_counts` pattern);
     rows then contribute `weight` occurrences instead of 1."""
     def pick(cum: DataFrame, keys: list[str]) -> DataFrame:
-        aggs, finals = _type7_exprs(col, quantiles)
-        return cum.groupBy(*keys).agg(*aggs).select(*keys, *finals)
+        return _type7_pick(cum, keys, col, quantiles)
 
     return _quantiles_from_counts(df, keys, col, weight, pick)
 
 
-def _type7_exprs(col: str, quantiles: list[tuple[str, int, int]]) -> tuple[list, list]:
-    """The type-7 rule of `cont_quantiles_from_counts` as expressions
-    over a cumulative-count relation carrying `col`, `_cum` and `_n`:
-    (per-group aggregates, final columns over those aggregates), one
-    final column per (alias, num, den) entry. The one copy of the
-    interpolation formula, shared with the `analytics.quantile_drift`
-    coda, which adds its own aggregate to the same pass."""
+def type7_from_counts(
+    counts: DataFrame,
+    keys: list[str],
+    col: str,
+    weight: str,
+    quantiles: list[tuple[str, int, int]],
+    **extra_aggs: Column,
+) -> DataFrame:
+    """The type-7 quantiles of `cont_quantiles_from_counts` over a
+    per-value count relation (`weight` names its count column) as one
+    lazy chain, for codas that need more per group than the quantiles:
+    the cumulative-count window per group, then one aggregate that
+    picks the quantiles and computes each named aggregate of
+    `extra_aggs` over the group's `counts` rows. Rows with NULL `col`
+    add no weight to the quantiles but stay visible to `extra_aggs`; a
+    group with no non-NULL value gets NULL quantiles. One row per group
+    of `counts`, NULL keys included (no join back to the groups)."""
+    from pyspark.sql import functions as F
+
+    valued = F.when(F.col(col).isNotNull(), F.col(weight))
+    carry = [c for c in counts.columns if c not in keys and c != col]
+    cum = _cumulative(counts, keys, col, valued, *carry)
+    return _type7_pick(cum, keys, col, quantiles, **extra_aggs)
+
+
+def _type7_pick(
+    cum: DataFrame,
+    keys: list[str],
+    col: str,
+    quantiles: list[tuple[str, int, int]],
+    **extra_aggs: Column,
+) -> DataFrame:
+    """The type-7 pick over a `_cumulative` relation: one row per group
+    with `extra_aggs` and one column per (alias, num, den) entry. The
+    one copy of the interpolation formula."""
     from pyspark.sql import functions as F
 
     aggs, finals = [], []
@@ -268,7 +295,35 @@ def _type7_exprs(col: str, quantiles: list[tuple[str, int, int]]) -> tuple[list,
                 f" - CAST(_lo_{alias} AS DOUBLE))) / CAST({den} AS DOUBLE)"
             ).alias(alias)
         )
-    return aggs, finals
+    extras = [agg.alias(name) for name, agg in extra_aggs.items()]
+    return (
+        cum.groupBy(*keys)
+        .agg(*extras, *aggs)
+        .select(*keys, *extra_aggs, *finals)
+    )
+
+
+def _cumulative(
+    counts: DataFrame, keys: list[str], col: str, weight: Column, *carry: str
+) -> DataFrame:
+    """(keys…, col, carry…, _cum, _n): per group, the running sum of
+    `weight` in `col` order and its total."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(col)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wn = Window.partitionBy(*keys)
+    return counts.select(
+        *keys,
+        F.col(col),
+        *carry,
+        F.sum(weight).over(w).alias("_cum"),
+        F.sum(weight).over(wn).alias("_n"),
+    )
 
 
 def _quantiles_from_counts(
@@ -287,7 +342,6 @@ def _quantiles_from_counts(
     the code path. ``weight`` names a count column when `df` already
     is a per-value count relation; otherwise each row counts once."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     drop_key = False
     if not keys:
@@ -302,18 +356,7 @@ def _quantiles_from_counts(
         .groupBy(*keys, col)
         .agg(agg_expr.alias("_c"))
     )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wn = Window.partitionBy(*keys)
-    cum = counts.select(
-        *keys,
-        F.col(col),
-        F.sum("_c").over(w).alias("_cum"),
-        F.sum("_c").over(wn).alias("_n"),
-    )
+    cum = _cumulative(counts, keys, col, F.col("_c"))
     out = groups.join(pick(cum, keys), keys, "left")
     return out.drop("_g") if drop_key else out
 

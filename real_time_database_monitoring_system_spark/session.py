@@ -51,12 +51,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # The trade (module docstring): about ten py4j round trips per
-        # Column function call (active-session lookup, JVM class
-        # lookup, conf read, origin set and clear) against the Python
-        # file:line in error context blocks. PySpark reads this once
-        # per process and caches it, so it is set at build time,
-        # before any Column function runs with a session active.
+        # Origin capture off, for the trade in the module docstring.
+        # PySpark reads this once per process and caches it, so it is
+        # set at build time, before any Column function runs with a
+        # session active.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # 100 TB posture: don't let tiny files explode task counts locally,
         # and keep broadcast threshold at default 10 MB (dimension tables

@@ -636,7 +636,9 @@ def test_quantile_drift_coda_edge_cases(spark):
     # out of order: type a has days 0, 1, 2 (day 1 a single row, day 0
     # also carries a NULL-cents row); type b has days 0 and 2 only (a
     # gap: day 2 gets NULL deltas, never paired with day 0); type c's
-    # only row on day 0 is NULL-cents
+    # only row on day 0 is NULL-cents. NULL keys (a NULL-type group on
+    # consecutive days, a NULL-day group) keep their quantiles but get
+    # NULL deltas: NULL never equals NULL in the oracle's day + 1 join
     rows = [
         ("b", 2, 700, 2),
         ("a", 0, 100, 2),
@@ -649,6 +651,11 @@ def test_quantile_drift_coda_edge_cases(spark):
         ("c", 0, None, 2),
         ("a", 2, 800, 4),
         ("b", 2, 200, 1),
+        (None, 1, 200, 2),
+        ("a", None, 600, 2),
+        (None, 0, 100, 1),
+        ("a", None, 250, 1),
+        (None, 0, 300, 1),
     ]
     counts = spark.createDataFrame(
         rows, "event_type string, day bigint, cents bigint, c bigint"
@@ -662,9 +669,10 @@ def test_quantile_drift_coda_edge_cases(spark):
         n_day[(t, d)] = n_day.get((t, d), 0) + c
         values.setdefault((t, d), []).extend([cents] * c if cents is not None else [])
     want = []
-    for t, d in sorted(n_day):
+    # Spark's ascending order puts NULL first
+    for t, d in sorted(n_day, key=lambda k: (k[0] is not None, k[0], k[1] is not None, k[1])):
         q = {a: _type7(values[(t, d)], num, den) if values[(t, d)] else None for a, num, den in qs}
-        prev = values.get((t, d - 1))
+        prev = values.get((t, d - 1)) if t is not None and d is not None else None
         row = {"event_type": t, "day": d, "n_day": n_day[(t, d)]}
         row.update({f"{a}_cents": q[a] for a, _, _ in qs})
         row.update(
@@ -679,6 +687,10 @@ def test_quantile_drift_coda_edge_cases(spark):
     assert by_key[("b", 2)]["d50_cents"] is None  # day gap: no pairing with day 0
     assert by_key[("a", 1)]["p99_cents"] == 500.0  # single-row day
     assert by_key[("a", 0)]["n_day"] == 4  # the NULL-cents row counts
+    assert by_key[(None, 1)]["p50_cents"] == 200.0
+    assert by_key[(None, 1)]["d50_cents"] is None  # NULL type: no pairing
+    assert by_key[("a", None)]["p50_cents"] == 600.0
+    assert by_key[("a", None)]["d50_cents"] is None  # NULL day: no pairing
     assert by_key[("c", 0)] == {
         "event_type": "c", "day": 0, "n_day": 2,
         **{f"{a}_cents": None for a, _, _ in qs},
