@@ -255,11 +255,8 @@ def type7_from_counts(
     add no weight to the quantiles but stay visible to `extra_aggs`; a
     group with no non-NULL value gets NULL quantiles. One row per group
     of `counts`, NULL keys included (no join back to the groups)."""
-    from pyspark.sql import functions as F
-
-    valued = F.when(F.col(col).isNotNull(), F.col(weight))
     carry = [c for c in counts.columns if c not in keys and c != col]
-    cum = _cumulative(counts, keys, col, valued, *carry)
+    cum = _cumulative(counts, keys, col, weight, *carry)
     return _type7_pick(cum, keys, col, quantiles, **extra_aggs)
 
 
@@ -304,13 +301,15 @@ def _type7_pick(
 
 
 def _cumulative(
-    counts: DataFrame, keys: list[str], col: str, weight: Column, *carry: str
+    counts: DataFrame, keys: list[str], col: str, weight: str, *carry: str
 ) -> DataFrame:
     """(keys…, col, carry…, _cum, _n): per group, the running sum of
-    `weight` in `col` order and its total."""
+    the `weight` column in `col` order and its total. Rows with NULL
+    `col` add no weight."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
+    valued = F.when(F.col(col).isNotNull(), F.col(weight))
     w = (
         Window.partitionBy(*keys)
         .orderBy(col)
@@ -321,8 +320,8 @@ def _cumulative(
         *keys,
         F.col(col),
         *carry,
-        F.sum(weight).over(w).alias("_cum"),
-        F.sum(weight).over(wn).alias("_n"),
+        F.sum(valued).over(w).alias("_cum"),
+        F.sum(valued).over(wn).alias("_n"),
     )
 
 
@@ -334,13 +333,15 @@ def _quantiles_from_counts(
     pick: Callable[[DataFrame, list[str]], DataFrame],
 ) -> DataFrame:
     """The counts-conversion core both quantile helpers share: the
-    per-group (keys…, value, _cum, _n) cumulative-count relation over
-    the non-NULL values, handed to ``pick(cum, keys)`` for the
-    per-group quantile rule, then left-joined back to every group so
-    all-NULL groups emit NULL quantiles. No keys → one constant `_g`
-    group (dropped again on the way out), so global quantiles share
-    the code path. ``weight`` names a count column when `df` already
-    is a per-value count relation; otherwise each row counts once."""
+    per-group (keys…, value, _cum, _n) cumulative-count relation,
+    handed to ``pick(cum, keys)`` for the per-group quantile rule.
+    NULL values stay in the relation as rows of no weight, so every
+    group, NULL keys included, keeps its one output row (no join back
+    to the groups), and a group with no non-NULL value gets NULL
+    quantiles. No keys → one constant `_g` group (dropped again on the
+    way out), so global quantiles share the code path. ``weight``
+    names a count column when `df` already is a per-value count
+    relation; otherwise each row counts once."""
     from pyspark.sql import functions as F
 
     drop_key = False
@@ -349,15 +350,9 @@ def _quantiles_from_counts(
         df = df.withColumn("_g", F.lit(1))
         keys = ["_g"]
         drop_key = True
-    groups = df.select(*keys).distinct()
     agg_expr = F.count("*") if weight is None else F.sum(weight)
-    counts = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(*keys, col)
-        .agg(agg_expr.alias("_c"))
-    )
-    cum = _cumulative(counts, keys, col, F.col("_c"))
-    out = groups.join(pick(cum, keys), keys, "left")
+    counts = df.groupBy(*keys, col).agg(agg_expr.alias("_c"))
+    out = pick(_cumulative(counts, keys, col, "_c"), keys)
     return out.drop("_g") if drop_key else out
 
 

@@ -631,6 +631,28 @@ def _type7(values, num, den):
     return float(lo) + (float(rem) * (float(hi) - float(lo))) / float(den)
 
 
+# (event_type, day, cents, c) rows shared by the two tests below; the
+# first one describes them
+_CODA_ROWS = [
+    ("b", 2, 700, 2),
+    ("a", 0, 100, 2),
+    ("b", 0, 100, 1),
+    ("a", 2, 300, 1),
+    ("a", 0, None, 1),
+    ("b", 0, 900, 3),
+    ("a", 1, 500, 3),
+    ("a", 0, 400, 1),
+    ("c", 0, None, 2),
+    ("a", 2, 800, 4),
+    ("b", 2, 200, 1),
+    (None, 1, 200, 2),
+    ("a", None, 600, 2),
+    (None, 0, 100, 1),
+    ("a", None, 250, 1),
+    (None, 0, 300, 1),
+]
+
+
 def test_quantile_drift_coda_edge_cases(spark):
     # hand-built (event_type, day, cents, c) relation, rows deliberately
     # out of order: type a has days 0, 1, 2 (day 1 a single row, day 0
@@ -639,24 +661,7 @@ def test_quantile_drift_coda_edge_cases(spark):
     # only row on day 0 is NULL-cents. NULL keys (a NULL-type group on
     # consecutive days, a NULL-day group) keep their quantiles but get
     # NULL deltas: NULL never equals NULL in the oracle's day + 1 join
-    rows = [
-        ("b", 2, 700, 2),
-        ("a", 0, 100, 2),
-        ("b", 0, 100, 1),
-        ("a", 2, 300, 1),
-        ("a", 0, None, 1),
-        ("b", 0, 900, 3),
-        ("a", 1, 500, 3),
-        ("a", 0, 400, 1),
-        ("c", 0, None, 2),
-        ("a", 2, 800, 4),
-        ("b", 2, 200, 1),
-        (None, 1, 200, 2),
-        ("a", None, 600, 2),
-        (None, 0, 100, 1),
-        ("a", None, 250, 1),
-        (None, 0, 300, 1),
-    ]
+    rows = _CODA_ROWS
     counts = spark.createDataFrame(
         rows, "event_type string, day bigint, cents bigint, c bigint"
     )
@@ -696,6 +701,52 @@ def test_quantile_drift_coda_edge_cases(spark):
         **{f"{a}_cents": None for a, _, _ in qs},
         **{f"d{a[1:]}_cents": None for a, _, _ in qs},
     }
+
+
+def test_counts_quantiles_keep_null_key_groups(spark):
+    # a NULL key is a group like any other, as in SQL's GROUP BY: the
+    # NULL-type groups (values 100/300 on day 0, 200 twice on day 1)
+    # and the NULL-day group get their quantiles, not NULL
+    from real_time_database_monitoring_system_spark.operators.util import (
+        cont_quantiles_from_counts,
+        disc_quantiles_from_counts,
+    )
+
+    counts = spark.createDataFrame(
+        _CODA_ROWS, "event_type string, day bigint, cents bigint, c bigint"
+    )
+    keys = ["event_type", "day"]
+    qs = [("p25", 1, 4), ("p50", 1, 2), ("p99", 99, 100)]
+    values: dict[tuple[str, int], list[int]] = {}
+    for t, d, cents, c in _CODA_ROWS:
+        values.setdefault((t, d), []).extend([cents] * c if cents is not None else [])
+
+    cont = {
+        (r["event_type"], r["day"]): r.asDict()
+        for r in cont_quantiles_from_counts(counts, keys, "cents", qs, weight="c").collect()
+    }
+    # the disc helper counts rows itself: one row per occurrence
+    rows = counts.select(
+        *keys, F.explode(F.array_repeat("cents", F.col("c").cast("int"))).alias("cents")
+    )
+    disc = {
+        (r["event_type"], r["day"]): r.asDict()
+        for r in disc_quantiles_from_counts(rows, keys, "cents", qs).collect()
+    }
+    assert set(cont) == set(disc) == set(values)
+    for key, vs in values.items():
+        for alias, num, den in qs:
+            want = _type7(vs, num, den) if vs else None
+            assert cont[key][alias] == want, (key, alias)
+            # percentile_disc: the smallest value whose cumulative
+            # count reaches num/den of the group's values
+            v = sorted(vs)
+            want = next((x for i, x in enumerate(v) if (i + 1) * den >= len(v) * num), None)
+            assert disc[key][alias] == want, (key, alias)
+    assert cont[(None, 0)]["p50"] == 200.0
+    assert cont[(None, 1)]["p50"] == 200.0
+    assert cont[("a", None)]["p50"] == 600.0
+    assert disc[(None, 0)]["p50"] == 100
 
 
 def test_brown_forsythe_brute_force(spark):
