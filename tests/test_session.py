@@ -21,11 +21,12 @@ def test_runtime_error_keeps_its_class_without_origin_capture(spark):
 
 
 def test_local_checkpoints_rename_through_filesystem(spark, tmp_path):
-    # the FileContext rename starts a readlink process per call without
+    # the FileContext rename starts readlink processes on every call without
     # libhadoop; a Spark upgrade that renames the conf or the class must
     # fail here rather than quietly start those processes again
     jvm = spark._jvm
-    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
         jvm.org.apache.hadoop.fs.Path(f"file:{tmp_path}"),
         spark._jsparkSession.sessionState().newHadoopConf(),
     )
