@@ -8849,29 +8849,39 @@ def oracle_sql() -> dict[str, str]:
             )
         return ",\n                   ".join(sel), ",\n               ".join(fin)
 
-    _vq_sel, _vq_fin = _contq_fragments(
-        [("p50", 1, 2), ("p95", 19, 20), ("p99", 99, 100)]
-    )
-    sql["value_percentiles_interp"] = f"""
+    # One keyed counts-quantile query, as util.cont_quantiles_from_counts
+    # builds it: NULL values stay in the count relation as rows of no
+    # weight, so every GROUP BY group keeps its row — NULL keys
+    # included, which a join back to the groups (USING never matches
+    # NULL) would lose — and a group with no non-NULL value gets NULL
+    # quantiles
+    def _contq_keyed_sql(table, key, value, quantiles):
+        q_sel, q_fin = _contq_fragments(quantiles)
+        w = "CASE WHEN value IS NOT NULL THEN _c END"
+        return f"""
         WITH c AS (
-            SELECT event_type, value, count(*) AS _c
-            FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+            SELECT {key}, {value} AS value, count(*) AS _c
+            FROM {table} GROUP BY 1, 2),
         cum AS (
-            SELECT event_type, value,
-                   SUM(_c) OVER (PARTITION BY event_type ORDER BY value
+            SELECT {key}, value,
+                   SUM({w}) OVER (PARTITION BY {key} ORDER BY value
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _cum,
-                   SUM(_c) OVER (PARTITION BY event_type) AS _n
+                   SUM({w}) OVER (PARTITION BY {key}) AS _n
             FROM c),
         p AS (
-            SELECT event_type,
-                   {_vq_sel}
-            FROM cum GROUP BY 1),
-        g AS (SELECT DISTINCT event_type FROM events)
-        SELECT g.event_type,
-               {_vq_fin}
-        FROM g LEFT JOIN p USING (event_type)
-        ORDER BY event_type
+            SELECT {key},
+                   {q_sel}
+            FROM cum GROUP BY 1)
+        SELECT {key},
+               {q_fin}
+        FROM p
+        ORDER BY {key}
     """
+
+    sql["value_percentiles_interp"] = _contq_keyed_sql(
+        "events", "event_type", "value",
+        [("p50", 1, 2), ("p95", 19, 20), ("p99", 99, 100)],
+    )
 
     # day-over-day sliding-reference PSI: fixed integer-cent bins
     # (psi_fixed_bin_sql shared verbatim), dense bin spine per scored
@@ -9312,29 +9322,10 @@ def oracle_sql() -> dict[str, str]:
     # counts-based continuous family — fragments generated from the
     # same quantile list as the Spark side, so the interpolation
     # expression cannot drift
-    _dlp_sel, _dlp_fin = _contq_fragments(
-        [("p25", 1, 4), ("p50", 1, 2), ("p75", 3, 4), ("p95", 19, 20)]
+    sql["doc_length_percentiles"] = _contq_keyed_sql(
+        "documents", "source", "n_chars",
+        [("p25", 1, 4), ("p50", 1, 2), ("p75", 3, 4), ("p95", 19, 20)],
     )
-    sql["doc_length_percentiles"] = f"""
-        WITH c AS (
-            SELECT source, n_chars AS value, count(*) AS _c
-            FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2),
-        cum AS (
-            SELECT source, value,
-                   SUM(_c) OVER (PARTITION BY source ORDER BY value
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _cum,
-                   SUM(_c) OVER (PARTITION BY source) AS _n
-            FROM c),
-        p AS (
-            SELECT source,
-                   {_dlp_sel}
-            FROM cum GROUP BY 1),
-        g AS (SELECT DISTINCT source FROM documents)
-        SELECT g.source,
-               {_dlp_fin}
-        FROM g LEFT JOIN p USING (source)
-        ORDER BY source
-    """
 
     # vocabulary overlap matrix: exact set sizes/intersections over
     # the fertility tokenization (shared verbatim), two double

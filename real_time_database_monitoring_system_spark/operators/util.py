@@ -174,9 +174,9 @@ def disc_quantiles_from_counts(
     `ks_drift`/`mwu` trade; production quantizes values to bound it).
 
     NULL values are ignored (the `percentile_disc` contract); groups
-    whose values are ALL NULL emit NULL quantiles (derived from the
-    all-groups relation, matching the aggregate's behavior row for
-    row). `quantiles` entries are (alias, num, den).
+    whose values are ALL NULL emit NULL quantiles (their NULL rows
+    stay in the count relation with no weight, matching the
+    aggregate's behavior row for row). `quantiles` entries are (alias, num, den).
     """
     from pyspark.sql import functions as F
 

@@ -1405,14 +1405,8 @@ def stream_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _events_stream(spark, sf_dir)
     state_agg = src.groupBy("event_type", "value").agg(F.count("*").alias("n"))
-    # materialize before the coda: the quantile helper joins two
-    # derivations of the state (groups × picked), and a memory-sink
-    # View self-join fails analysis with conflicting references (the
-    # streaming_period_over_period gotcha — LogicalRDD dedups per
-    # consumer)
-    state = materialize(_run_to_memory(state_agg, "complete"))
     return cont_quantiles_from_counts(
-        state,
+        _run_to_memory(state_agg, "complete"),
         ["event_type"],
         "value",
         [("p50", 1, 2), ("p95", 19, 20), ("p99", 99, 100)],

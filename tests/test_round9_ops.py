@@ -749,6 +749,57 @@ def test_counts_quantiles_keep_null_key_groups(spark):
     assert disc[(None, 0)]["p50"] == 100
 
 
+
+@pytest.mark.parametrize(
+    "name", ["value_percentiles_interp", "streaming_value_percentiles", "doc_length_percentiles"]
+)
+def test_counts_quantiles_null_key_oracle_parity(spark, tmp_path, name):
+    # the registry callers of the counts quantiles and their DuckDB
+    # oracles agree on a feed with a NULL key (a group with values and
+    # a NULL value) and a key whose values are all NULL
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from __spark_entry__ import queries
+    from tests.oracle_harness import compare_frame, run_oracle
+
+    ts = pa.array([1_700_000_000_000_000 + i for i in range(9)], pa.timestamp("us"))
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(9), pa.int64()),
+                "ts": ts,
+                "user_id": pa.array([7] * 9, pa.int64()),
+                "event_type": [None, None, None, "a", "a", "a", "a", "c", "c"],
+                "value": [100.0, 300.0, None, 1.0, 2.0, 3.0, 4.0, None, None],
+                "props": pa.array([None] * 9, pa.string()),
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(7), pa.int64()),
+                "text": ["x"] * 7,
+                "lang": ["en"] * 7,
+                "source": [None, None, None, "s1", "s1", "s1", "s2"],
+                "n_chars": pa.array([10, 30, None, 5, 7, 9, None], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    con = duckdb.connect()
+    for t in ("events", "documents"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')")
+    sdf = queries()[name](spark, str(tmp_path))
+    assert compare_frame(sdf, run_oracle(con, name)) == []
+    key = sdf.columns[0]
+    null_group = [r for r in sdf.collect() if r[key] is None]
+    assert len(null_group) == 1 and null_group[0]["p50"] == (200.0 if key == "event_type" else 20.0)
+
+
 def test_brown_forsythe_brute_force(spark):
     # F from emitted components vs a scipy-free reference
     samples = {
