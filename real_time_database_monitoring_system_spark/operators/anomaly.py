@@ -279,8 +279,10 @@ def winsorized_stats(events: DataFrame, lo: float = 0.05, hi: float = 0.95) -> D
             F.count("*").alias("n"),
             F.first("p_lo").alias("p_lo"),
             F.first("p_hi").alias("p_hi"),
-            F.sum((F.col("value") < F.col("p_lo")).cast("bigint")).alias("n_below"),
-            F.sum((F.col("value") > F.col("p_hi")).cast("bigint")).alias("n_above"),
+            # count(when), not sum(cast): 0 rather than NULL for a type
+            # whose values are all NULL, as in SQL's sum(CASE ... ELSE 0)
+            F.count(F.when(F.col("value") < F.col("p_lo"), 1)).alias("n_below"),
+            F.count(F.when(F.col("value") > F.col("p_hi"), 1)).alias("n_above"),
             F.sum(clipped.cast("decimal(18,2)")).alias("win_sum"),
         )
         .select(

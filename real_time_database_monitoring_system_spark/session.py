@@ -26,24 +26,44 @@ in both regimes:
   through Hadoop's ``FileContext``, and without libhadoop's native
   code the local ``FileContext`` rename starts ``readlink`` processes
   on every call: one perfbench stream_replay replay (rollup plus alerts,
-  6 micro-batches) started 368 ``readlink`` and 162 ``chmod``
-  processes with the default manager, 0 and 162 with this one, and
-  its median micro-batch fell from 0.67 s to 0.51 s on a 4-core host.
-  This manager renames with a plain ``rename(2)``, which on a local
-  disk is atomic and replaces the target in one step. It writes the
-  same files, Spark's per-file ``.delta.crc`` checksums and Hadoop's
-  ``.crc`` companions included. The ``chmod`` processes come from
-  file creation and stay until libhadoop is available. Cluster
-  sessions keep Spark's default: on HDFS only the ``FileContext``
-  rename replaces a file atomically, which the state store relies on
-  when a failed batch is run again.
+  6 micro-batches) started 368 ``readlink`` processes with the default
+  manager and 0 with this one, and its median micro-batch fell from
+  0.67 s to 0.51 s on a 4-core host. This manager renames with a plain
+  ``rename(2)``, which on a local disk is atomic and replaces the
+  target in one step. It writes the same files, Spark's per-file
+  ``.delta.crc`` checksums and Hadoop's ``.crc`` companions included.
+  Cluster sessions keep Spark's default: on HDFS only the
+  ``FileContext`` rename replaces a file atomically, which the state
+  store relies on when a failed batch is run again.
+- Local sessions that launch their own JVM serve ``file:`` paths with
+  ``jvm/NioLocalFileSystem.java`` (``LOCAL_FS_CLASS``, shipped built
+  as ``LOCAL_FS_JAR``). Without libhadoop, Hadoop's local filesystem
+  sets the mode of every file and directory it creates by starting a
+  ``chmod`` process, about 4 ms each: 162 per stream_replay replay,
+  one for each checkpoint entry, state delta and ``.crc`` companion.
+  This class sets the same umask-applied bits with one ``chmod(2)``
+  through ``java.nio`` and starts none; only a sticky-bit mode, which
+  ``java.nio`` cannot express, still goes through Hadoop's own path.
+  The files and their modes are unchanged. The jar has to be on the
+  driver's class path when the JVM starts, so both confs are set only
+  when this process launches it: a session the engine did not launch
+  copies its SQL confs into every Hadoop conf it builds and would fail
+  with ``ClassNotFoundException`` on its next file read. Cluster
+  sessions keep Hadoop's default.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# Hadoop's local filesystem without a forked chmod per created file
+# (module docstring); tools/build_jvm.py builds the jar from its source
+LOCAL_FS_JAR = str(Path(__file__).with_name("jvm") / "nio-localfs.jar")
+LOCAL_FS_CLASS = "rtdbms.fs.NioLocalFileSystem"
 
 
 def get_spark(
@@ -97,6 +117,14 @@ def get_spark(
     )
     if master:
         builder = builder.master(master)
+        # launch-time confs, set together and only when this process
+        # starts the JVM (module docstring)
+        launches_jvm = (
+            SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+        )
+        if master.startswith("local") and launches_jvm:
+            builder = builder.config("spark.driver.extraClassPath", LOCAL_FS_JAR)
+            builder = builder.config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
     if driver_memory:
         builder = builder.config("spark.driver.memory", driver_memory)
     return builder.getOrCreate()

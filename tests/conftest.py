@@ -3,10 +3,13 @@ from __future__ import annotations
 import fnmatch
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package and driver modules, whichever copy of the
+# repository the suite runs from
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from real_time_database_monitoring_system_spark.session import get_local_spark  # noqa: E402
 

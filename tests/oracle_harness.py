@@ -10,10 +10,11 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 from real_time_database_monitoring_system_spark.sources.registry import TABLES  # noqa: E402

@@ -750,19 +750,13 @@ def test_counts_quantiles_keep_null_key_groups(spark):
 
 
 
-@pytest.mark.parametrize(
-    "name", ["value_percentiles_interp", "streaming_value_percentiles", "doc_length_percentiles"]
-)
-def test_counts_quantiles_null_key_oracle_parity(spark, tmp_path, name):
-    # the registry callers of the counts quantiles and their DuckDB
-    # oracles agree on a feed with a NULL key (a group with values and
-    # a NULL value) and a key whose values are all NULL
+def _null_key_feed(tmp_path):
+    """DuckDB views over a hand-built events/documents feed with a NULL
+    key (a group with values and a NULL value) and a key whose values
+    are all NULL, written as parquet under ``tmp_path``."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from __spark_entry__ import queries
-    from tests.oracle_harness import compare_frame, run_oracle
 
     ts = pa.array([1_700_000_000_000_000 + i for i in range(9)], pa.timestamp("us"))
     pq.write_table(
@@ -793,11 +787,37 @@ def test_counts_quantiles_null_key_oracle_parity(spark, tmp_path, name):
     con = duckdb.connect()
     for t in ("events", "documents"):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')")
+    return con
+
+
+@pytest.mark.parametrize(
+    "name", ["value_percentiles_interp", "streaming_value_percentiles", "doc_length_percentiles"]
+)
+def test_counts_quantiles_null_key_oracle_parity(spark, tmp_path, name):
+    # the registry callers of the counts quantiles and their DuckDB
+    # oracles agree on a feed with a NULL key and an all-NULL-value key
+    from __spark_entry__ import queries
+    from tests.oracle_harness import compare_frame, run_oracle
+
+    con = _null_key_feed(tmp_path)
     sdf = queries()[name](spark, str(tmp_path))
     assert compare_frame(sdf, run_oracle(con, name)) == []
     key = sdf.columns[0]
     null_group = [r for r in sdf.collect() if r[key] is None]
     assert len(null_group) == 1 and null_group[0]["p50"] == (200.0 if key == "event_type" else 20.0)
+
+
+def test_winsorized_stats_all_null_type_oracle_parity(spark, tmp_path):
+    # a type whose values are all NULL has no value below or above its
+    # cut points: 0 on both engines, not NULL on the Spark side
+    from __spark_entry__ import queries
+    from tests.oracle_harness import compare_frame, run_oracle
+
+    con = _null_key_feed(tmp_path)
+    sdf = queries()["winsorized_stats"](spark, str(tmp_path))
+    assert compare_frame(sdf, run_oracle(con, "winsorized_stats")) == []
+    ghost = [r for r in sdf.collect() if r["event_type"] == "c"]
+    assert [(r["n"], r["n_below"], r["n_above"]) for r in ghost] == [(2, 0, 0)]
 
 
 def test_brown_forsythe_brute_force(spark):
@@ -934,9 +954,6 @@ def test_registry_wide_plan_audit(spark):
     dedup_agreement_kappa runs BOTH dedup paths it compares (the
     banded minhash pass + the exact inverted-index pass, each its own
     operator's budget) plus the verdict joins — 20, audited r9."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from __spark_entry__ import queries
     from real_time_database_monitoring_system_spark.plans import checks
 
